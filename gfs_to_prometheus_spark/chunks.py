@@ -100,6 +100,91 @@ def _decode_many(
     return out_t, out_v
 
 
+# ---------------------------------------------------------------------------
+# the chunk-kernel skeleton: every kernel receives rows sorted by its group
+# key in Arrow batches, finds the groups, carries the batch's trailing group
+# into the next batch and cuts oversized groups — these helpers are the only
+# implementation of each step (sources/gfs_binary shares them too)
+# ---------------------------------------------------------------------------
+
+
+def group_starts(pdf: pd.DataFrame, keys: Sequence[str]) -> np.ndarray:
+    """Row index where each run of equal ``keys`` begins (row 0 always)."""
+    k = pdf[list(keys)]
+    return np.flatnonzero(k.ne(k.shift()).any(axis=1).to_numpy())
+
+
+def carry_groups(batches, keys: Sequence[str], cap: int | None = None):
+    """Yield ``(frame, group start rows)`` of whole groups from key-sorted
+    Arrow batches. Groups never span partitions (callers exchange every
+    row of a group into one partition); they MAY span batches, so each
+    batch's trailing (possibly incomplete) group is carried into the
+    next. With ``cap``, a trailing group longer than ``cap`` rows is
+    flushed in whole ``cap``-row pieces at once (the kernel may cut
+    mid-group there), keeping the carry — and its re-concat per batch —
+    bounded."""
+    carry: pd.DataFrame | None = None
+    for pdf in batches:
+        if carry is not None and len(carry):
+            pdf = pd.concat([carry, pdf], ignore_index=True)
+        if not len(pdf):
+            continue
+        starts = group_starts(pdf, keys)
+        cut = int(starts[-1])
+        if cap is not None and len(pdf) - cut > cap:
+            cut += (len(pdf) - cut) // cap * cap
+        carry = pdf.iloc[cut:].copy()
+        if cut:
+            yield pdf.iloc[:cut], starts[starts < cut]
+    if carry is not None and len(carry):
+        yield carry, group_starts(carry, keys)
+
+
+def _split_runs(
+    starts: np.ndarray, total: int, cap: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Cut the contiguous runs ``[starts[i], starts[i+1])`` (the last ends
+    at ``total``) into pieces of at most ``cap`` rows -> (piece starts,
+    piece ends). Prometheus likewise cuts head chunks at ~120 samples."""
+    ends = np.append(starts[1:], total)[: len(starts)]
+    pieces = -(-(ends - starts) // cap)
+    run = np.repeat(np.arange(len(starts)), pieces)
+    k = np.arange(len(run)) - np.repeat(np.cumsum(pieces) - pieces, pieces)
+    s = starts[run] + k * cap
+    return s, np.minimum(s + cap, ends[run])
+
+
+def _chunk_frame(
+    pdf: pd.DataFrame, series_l: list, src_rows: np.ndarray,
+    block_start: np.ndarray, t_all: np.ndarray, v_all: np.ndarray,
+    starts: np.ndarray, ends: np.ndarray,
+) -> pd.DataFrame:
+    """Chunk rows for the sample runs ``[starts, ends)``; series values
+    come from ``pdf``'s ``src_rows``."""
+    ts_chunks, val_chunks = _encode_payloads(t_all, v_all, starts, ends)
+    rows = {c: pdf[c].to_numpy()[src_rows] for c in series_l}
+    rows.update(
+        block_start_ms=block_start,
+        n=ends - starts,
+        t_min_ms=t_all[starts],
+        t_max_ms=t_all[ends - 1],
+        ts_chunk=ts_chunks,
+        val_chunk=val_chunks,
+        codec=CODEC_NAME,
+    )
+    return pd.DataFrame(rows)
+
+
+def _expand(pdf: pd.DataFrame, series_l: list) -> pd.DataFrame:
+    """Chunk rows -> one (series..., ts_ms, value) row per sample."""
+    ns = pdf["n"].to_numpy(np.int64)
+    t, v = _decode_many(pdf["ts_chunk"].tolist(), pdf["val_chunk"].tolist(), ns)
+    d = {c: np.repeat(pdf[c].to_numpy(), ns) for c in series_l}
+    d["ts_ms"] = t
+    d["value"] = v
+    return pd.DataFrame(d)
+
+
 def _encode_pipeline(
     df: DataFrame,
     series: Sequence[str],
@@ -109,9 +194,9 @@ def _encode_pipeline(
     salt: int,
     max_chunk_samples: int,
 ):
-    """Shared encode machinery: (sorted_base, keys, series_l,
-    _encode_groups) — the repartition+sort prep and the per-head encode
-    kernel used by both encode_chunks and roundtrip_chunks."""
+    """Shared encode machinery: (sorted_base, heads) — the repartition+sort
+    prep, and a batch iterator -> encoded chunk frames (used by both
+    encode_chunks and roundtrip_chunks)."""
     step_ms = block_s * 1000
     base = df.select(
         *series,
@@ -151,69 +236,17 @@ def _encode_pipeline(
     # byte range; python-side codec CPU is. So _block ships; only the salt
     # is shrunk to i32 (no python-side rebuild needed for that one).
 
-    def _encode_groups(pdf: pd.DataFrame) -> pd.DataFrame:
-        t_all = pdf["_ts_ms"].to_numpy(np.int64)
-        v_all = pdf["_val"].to_numpy(np.float64)
-        gid = (
-            pdf[keys].ne(pdf[keys].shift()).any(axis=1).to_numpy().cumsum()
-        )
-        starts = np.flatnonzero(np.diff(gid, prepend=gid[0] - 1))
-        ends = np.append(starts[1:], len(pdf))
-        if int((ends - starts).max()) > max_chunk_samples:
-            # subdivide oversized groups into <=max_chunk_samples chunks
-            s2, e2 = [], []
-            for s, e in zip(starts, ends):
-                for c in range(s, e, max_chunk_samples):
-                    s2.append(c)
-                    e2.append(min(c + max_chunk_samples, e))
-            starts = np.array(s2, dtype=np.int64)
-            ends = np.array(e2, dtype=np.int64)
-        # all per-group metadata extracted vectorized; only the multi-sample
-        # codec calls loop (numpy per chunk; 1-sample chunks are batched)
-        ts_chunks, val_chunks = _encode_payloads(t_all, v_all, starts, ends)
-        rows = {c: pdf[c].to_numpy()[starts] for c in series_l}
-        rows.update(
-            block_start_ms=pdf["_block"].to_numpy(np.int64)[starts],
-            n=ends - starts,
-            t_min_ms=t_all[starts],
-            t_max_ms=t_all[ends - 1],
-            ts_chunk=ts_chunks,
-            val_chunk=val_chunks,
-            codec=CODEC_NAME,
-        )
-        return pd.DataFrame(rows)
+    def heads(batches):
+        # the carry cap is max_chunk_samples: a hot series' block with
+        # millions of samples streams through in O(batch) memory
+        for pdf, starts in carry_groups(batches, keys, max_chunk_samples):
+            t_all = pdf["_ts_ms"].to_numpy(np.int64)
+            v_all = pdf["_val"].to_numpy(np.float64)
+            s, e = _split_runs(starts, len(pdf), max_chunk_samples)
+            block = pdf["_block"].to_numpy(np.int64)[s]
+            yield _chunk_frame(pdf, series_l, s, block, t_all, v_all, s, e)
 
-    return sorted_base, keys, series_l, _encode_groups
-
-
-def _carry_batches(batches, keys, max_chunk_samples: int):
-    """Yield head frames whose trailing (possibly incomplete) group is
-    carried into the next Arrow batch. Groups never span partitions (hash
-    repartition on the full key); they MAY span batches — this carry
-    buffer re-attaches the tail. A giant trailing group is flushed as
-    full chunks immediately (max_chunk_samples allows mid-group cuts),
-    keeping the carry — and its per-batch re-concat — bounded."""
-    carry: pd.DataFrame | None = None
-    for pdf in batches:
-        if carry is not None and len(carry):
-            pdf = pd.concat([carry, pdf], ignore_index=True)
-        if not len(pdf):
-            continue
-        # hold back the trailing (possibly incomplete) group
-        last_key = pdf[keys].iloc[-1]
-        tail_mask = (pdf[keys] == last_key).all(axis=1).to_numpy()
-        # rows of the final contiguous run with the last key
-        cut = len(pdf) - int(
-            np.argmin(tail_mask[::-1]) if not tail_mask.all() else len(pdf)
-        )
-        tail_len = len(pdf) - cut
-        if tail_len > max_chunk_samples:
-            cut = cut + (tail_len // max_chunk_samples) * max_chunk_samples
-        head, carry = pdf.iloc[:cut], pdf.iloc[cut:].copy()
-        if len(head):
-            yield head
-    if carry is not None and len(carry):
-        yield carry
+    return sorted_base, heads
 
 
 def encode_chunks(
@@ -230,25 +263,17 @@ def encode_chunks(
     Implementation: repartition+sortWithinPartitions, then mapInPandas
     with manual group detection — one Arrow exchange per 64k-row batch
     instead of per group (applyInPandas pays per-group overhead, which
-    dominates when chunks are small). Groups never span partitions
-    (hash repartition on the full key); groups MAY span Arrow batches,
-    handled with a carry buffer (_carry_batches).
+    dominates when chunks are small); groups spanning Arrow batches are
+    re-attached by carry_groups.
 
     ``max_chunk_samples`` cuts oversized groups into multiple chunk rows
     (Prometheus likewise cuts head chunks at ~120 samples): it bounds
-    both chunk decode memory AND the carry buffer — a hot series' block
-    with millions of samples streams through in O(batch) memory instead
-    of accumulating (and re-concatenating) the whole group."""
-    sorted_base, keys, series_l, _encode_groups = _encode_pipeline(
+    both chunk decode memory AND the carry buffer."""
+    sorted_base, heads = _encode_pipeline(
         df, series, ts, value, block_s, salt, max_chunk_samples
     )
     out_schema = f"{_series_schema(df, series)}, {CHUNK_FIELDS}"
-
-    def build(batches):
-        for head in _carry_batches(batches, keys, max_chunk_samples):
-            yield _encode_groups(head)
-
-    return sorted_base.mapInPandas(build, schema=out_schema)
+    return sorted_base.mapInPandas(heads, schema=out_schema)
 
 
 def roundtrip_chunks(
@@ -267,28 +292,21 @@ def roundtrip_chunks(
     crosses Python->JVM over Arrow only so decode can pull it JVM->Python
     right back — two full serializations of the chunk table that exist
     for no consumer (guide §4: eliminate boundary crossings). Here the
-    same _encode_groups kernel runs per head batch and its output is
-    decoded IN PLACE with the same _decode_many kernel, so results are
-    bit-identical to the unfused pair by construction (pinned by
+    same encode kernel runs per head batch and its output is decoded IN
+    PLACE by the same _expand body, so results are bit-identical to the
+    unfused pair by construction (pinned by
     tests/test_skew.py::test_roundtrip_chunks_matches_unfused_pair);
     the encode->decode codec work itself is unchanged — every sample
     still round-trips the DoD/Gorilla wire bytes."""
-    sorted_base, keys, series_l, _encode_groups = _encode_pipeline(
+    sorted_base, heads = _encode_pipeline(
         df, series, ts, value, block_s, salt, max_chunk_samples
     )
+    series_l = list(series)
     out_schema = f"{_series_schema(df, series)}, ts_ms bigint, value double"
 
     def build(batches):
-        for head in _carry_batches(batches, keys, max_chunk_samples):
-            enc = _encode_groups(head)
-            ns = enc["n"].to_numpy(np.int64)
-            t, v = _decode_many(
-                enc["ts_chunk"].tolist(), enc["val_chunk"].tolist(), ns
-            )
-            d = {c: np.repeat(enc[c].to_numpy(), ns) for c in series_l}
-            d["ts_ms"] = t
-            d["value"] = v
-            yield pd.DataFrame(d)
+        for enc in heads(batches):
+            yield _expand(enc, series_l)
 
     return sorted_base.mapInPandas(build, schema=out_schema)
 
@@ -303,142 +321,83 @@ def decode_chunks(
 
     def expand(batches):
         for pdf in batches:
-            ns = pdf["n"].to_numpy(np.int64)
-            t, v = _decode_many(
-                pdf["ts_chunk"].tolist(), pdf["val_chunk"].tolist(), ns
-            )
-            d = {c: np.repeat(pdf[c].to_numpy(), ns) for c in series_l}
-            d["ts_ms"] = t
-            d["value"] = v
-            yield pd.DataFrame(d)
+            yield _expand(pdf, series_l)
 
     return chunks.mapInPandas(expand, schema=out_schema)
 
 
 def recode_chunks(
     chunks_df: DataFrame,
+    task_col: str,
+    n_tasks: int,
     series: Sequence[str] = ("event_type",),
     block_s: int = 86_400,
     max_chunk_samples: int = 4096,
-    partition_col: str | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """chunk rows -> chunk rows at ``block_s``, shuffling ENCODED chunks.
 
-    The decode->encode pair (decode_chunks + encode_chunks) shuffles the
-    DECODED samples and crosses the JVM<->Python boundary twice. Here the
-    shuffle moves the compressed chunk rows instead (at a healthy 120-
-    sample chunk density that is ~1/100 the rows and a fraction of the
-    bytes — the guide-§8 "move the compact proxy, not the payload" rule),
-    and decode + re-encode happen in ONE mapInPandas pass, so samples
-    never exist as JVM rows at all.
+    A decode->encode pair (decode_chunks + encode_chunks) would shuffle
+    the DECODED samples and cross the JVM<->Python boundary twice. Here
+    the shuffle moves the compressed chunk rows instead (at a healthy
+    120-sample chunk density that is ~1/100 the rows and a fraction of
+    the bytes — the guide-§8 "move the compact proxy, not the payload"
+    rule), and decode + re-encode happen in ONE mapInPandas pass, so
+    samples never exist as JVM rows at all.
 
-    PRECONDITION: every source chunk must nest inside one target block
-    (floor(block_start_ms/step) == floor(t_max_ms/step)); the caller
-    checks this on its stats scan (jobs/compact.py) and falls back to the
-    sample-level pair otherwise. A per-group assert repeats the check.
+    A source chunk is routed to every target block its samples overlap
+    (``explode(sequence(first, last, step))`` over t_min_ms..t_max_ms);
+    each copy keeps only the samples inside its own block, so source
+    blocks need not nest in target blocks (2h chunks -> 3h blocks).
 
-    ``partition_col``/``num_partitions``: optional file-layout partitioning
-    — a hash repartition on that column alone. The caller maps its task
-    index through the murmur3 probe table (jobs/compact.py) so distinct
-    values land in distinct tasks with no collision day-mixing (ADVICE
-    r5) and no range-exchange sampling pass. The column must be constant
-    per (series, target-block) group so groups stay intact. Default:
-    hash on (series, block).
+    Placement: ``task_col`` holds each row's task index in
+    ``[0, n_tasks)`` and ``repartitionById`` sends the row to exactly that
+    task — no hash collisions and no range-exchange sampling pass, and
+    the plan does not grow with ``n_tasks``. The column must be constant
+    per (series, target-block) group so groups stay intact.
 
     Memory: one buffered group = one (series, target-block)'s chunk rows
-    plus its decoded samples — bounded by cadence x block span (the same
-    bound decode+encode pays per group), not by partition size.
+    plus its decoded samples — bounded by cadence x block span, not by
+    partition size.
     """
     step_ms = block_s * 1000
     series_l = list(series)
-    nb = (F.floor(F.col("block_start_ms") / F.lit(step_ms)) * step_ms).cast(
-        "long"
-    )
+
+    def block_of(c: str):
+        return (F.floor(F.col(c) / F.lit(step_ms)) * step_ms).cast("long")
+
     cols = [*series_l, "block_start_ms", "n", "ts_chunk", "val_chunk"]
-    base = chunks_df.select(
-        *cols, nb.alias("_nb"),
-        *( [F.col(partition_col)] if partition_col else [] ),
+    blocks = F.sequence(
+        block_of("t_min_ms"), block_of("t_max_ms"), F.lit(step_ms).cast("long")
     )
-    if partition_col:
-        rep = base.repartition(num_partitions, F.col(partition_col))
-    else:
-        rep = (
-            base.repartition(num_partitions, *series_l, "_nb")
-            if num_partitions
-            else base.repartition(*series_l, "_nb")
-        )
-    rep = rep.sortWithinPartitions(*series_l, "_nb", "block_start_ms")
+    rep = (
+        chunks_df.select(*cols, F.explode(blocks).alias("_nb"), task_col)
+        .repartitionById(n_tasks, task_col)
+        .sortWithinPartitions(*series_l, "_nb", "block_start_ms")
+    )
     keys = [*series_l, "_nb"]
     out_schema = f"{_series_schema(chunks_df, series_l)}, {CHUNK_FIELDS}"
 
-    def _recode_groups(pdf: pd.DataFrame) -> pd.DataFrame:
-        ns = pdf["n"].to_numpy(np.int64)
-        t_all, v_all = _decode_many(
-            pdf["ts_chunk"].tolist(), pdf["val_chunk"].tolist(), ns
-        )
-        gid = pdf[keys].ne(pdf[keys].shift()).any(axis=1).to_numpy().cumsum()
-        row_starts = np.flatnonzero(np.diff(gid, prepend=gid[0] - 1))
-        # samples per group -> group sample offsets
-        gn = np.add.reduceat(ns, row_starts) if len(ns) else np.empty(0, np.int64)
-        g_samples = np.repeat(np.arange(len(row_starts)), gn)
-        # stable per-group time sort (source chunks of one block may
-        # interleave when the source was salt-split)
-        order = np.lexsort((t_all, g_samples))
-        t_all, v_all = t_all[order], v_all[order]
-        ends_g = np.cumsum(gn)
-        starts_g = ends_g - gn
-        nb_rows = pdf["_nb"].to_numpy(np.int64)[row_starts]
-        if len(starts_g):
-            # nesting assert: the group's sample range must lie in its block
-            lo = t_all[starts_g]
-            hi = t_all[ends_g - 1]
-            if ((lo < nb_rows) | (hi >= nb_rows + step_ms)).any():
-                raise ValueError(
-                    "recode_chunks: source chunk crosses a target block "
-                    "boundary; use decode_chunks + encode_chunks instead"
-                )
-        starts, ends = starts_g, ends_g
-        if len(starts) and int((ends - starts).max()) > max_chunk_samples:
-            s2, e2 = [], []
-            for s, e in zip(starts, ends):
-                for c in range(s, e, max_chunk_samples):
-                    s2.append(c)
-                    e2.append(min(c + max_chunk_samples, e))
-            starts = np.array(s2, dtype=np.int64)
-            ends = np.array(e2, dtype=np.int64)
-        # map each output chunk back to its group's metadata rows
-        out_g = np.searchsorted(starts_g, starts, side="right") - 1
-        src_rows = row_starts[out_g]
-        ts_chunks, val_chunks = _encode_payloads(t_all, v_all, starts, ends)
-        rows = {c: pdf[c].to_numpy()[src_rows] for c in series_l}
-        rows.update(
-            block_start_ms=nb_rows[out_g],
-            n=ends - starts,
-            t_min_ms=t_all[starts],
-            t_max_ms=t_all[ends - 1],
-            ts_chunk=ts_chunks,
-            val_chunk=val_chunks,
-            codec=CODEC_NAME,
-        )
-        return pd.DataFrame(rows)
-
-    def fused(batches):
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            last_key = pdf[keys].iloc[-1]
-            tail_mask = (pdf[keys] == last_key).all(axis=1).to_numpy()
-            cut = len(pdf) - int(
-                np.argmin(tail_mask[::-1]) if not tail_mask.all() else len(pdf)
+    def recode(batches):
+        for pdf, starts in carry_groups(batches, keys):
+            ns = pdf["n"].to_numpy(np.int64)
+            t_all, v_all = _decode_many(
+                pdf["ts_chunk"].tolist(), pdf["val_chunk"].tolist(), ns
             )
-            head, carry = pdf.iloc[:cut], pdf.iloc[cut:].copy()
-            if len(head):
-                yield _recode_groups(head)
-        if carry is not None and len(carry):
-            yield _recode_groups(carry)
+            nb = pdf["_nb"].to_numpy(np.int64)[starts]
+            g = np.repeat(np.arange(len(starts)), np.add.reduceat(ns, starts))
+            # keep the samples inside the group's block (a straddling
+            # source chunk sits in one group per block it overlaps), then
+            # a stable per-group time sort (source chunks of one block may
+            # interleave when the source was salt-split)
+            keep = np.flatnonzero((t_all >= nb[g]) & (t_all < nb[g] + step_ms))
+            order = keep[np.lexsort((t_all[keep], g[keep]))]
+            t_all, v_all, g = t_all[order], v_all[order], g[order]
+            s, e = _split_runs(
+                np.flatnonzero(np.diff(g, prepend=-1)), len(g), max_chunk_samples
+            )
+            gs = g[s]
+            yield _chunk_frame(
+                pdf, series_l, starts[gs], nb[gs], t_all, v_all, s, e
+            )
 
-    return rep.mapInPandas(fused, schema=out_schema)
+    return rep.mapInPandas(recode, schema=out_schema)

@@ -21,9 +21,11 @@ information in three *sections* — fixed-width control codes, fixed-width
 headers, then concatenated variable-width payloads — so decode is
 vectorized numpy end-to-end:
 
-  ts_chunk:  [8B t0 LE] [3-bit bucket codes x (n-1), padded]
+  ts_chunk:  [8B t0 LE] [1-bit nonzero flags x (n-1), padded]
+             [2-bit bucket codes x nnz, padded]
              [zigzag dod payloads, widths from codes, padded]
-             buckets: 0 -> dod==0 (no payload), 1/2/3/4 -> 7/11/17/64 bits
+             flag 0 -> dod==0 (no code, no payload);
+             codes 0/1/2/3 -> 7/11/17/64-bit payloads
              reconstruction: ts = t0 + cumsum(cumsum(dods))
   val_chunk: [8B v0 LE] [1-bit diff flags x (n-1), padded]
              [11-bit headers (5 lead + 6 mean%64) per diff, padded]
@@ -496,8 +498,16 @@ def compact_encode(vals: np.ndarray) -> bytes:
     return out.tobytes()
 
 
-def compact_decode(buf: bytes) -> np.ndarray:
-    """Vectorized decode of a stream with data-dependent token positions.
+def _token_values(
+    b: np.ndarray, is_one: np.ndarray, width_of, widths: tuple,
+    signed: bool = False, stop: int | None = None,
+) -> np.ndarray:
+    """Values of a byte-token stream (the three Geode wire forms): a byte
+    with ``is_one`` IS its value (``b``'s dtype gives its sign); any other
+    byte announces a ``width_of(byte)``-byte big-endian payload
+    (two's complement when ``signed``). ``stop``, if given, is a
+    terminator byte; a trailing token whose payload is cut off ends the
+    stream too.
 
     Token positions form a pointer chain (each token's width tells where
     the next starts) — inherently sequential. The sequential part is
@@ -508,21 +518,17 @@ def compact_decode(buf: bytes) -> np.ndarray:
     map over the (small) candidate array — enumerated by pointer doubling
     in O(log m) whole-array rounds, no per-token Python. Everything else
     (token mask, payload combine) is bounded width-class vector ops."""
-    b = np.frombuffer(buf, dtype=np.int8)
-    n = len(b)
-    if n == 0:
-        return np.empty(0, dtype=np.int64)
     u8 = b.view(np.uint8)
-    is_one = b >= _MIN_1BYTE  # 1-byte token IF this byte is a token
+    n = len(b)
+    end = n
     cand = np.flatnonzero(~is_one)  # positions that LOOK like multi tokens
-    c = len(cand)
-    tok_mask = np.ones(n, dtype=bool)
-    if c:
-        wc = b[cand].astype(np.int64) - _TOKEN_BASE  # payload width 2..8
+    mt = wm = np.empty(0, dtype=np.int64)
+    if len(cand):
+        c = len(cand)
+        wc = width_of(b[cand])
         # candidate-index chain: from real multi token i, the next multi
         # token is the first candidate at or after its landing point
-        g = np.searchsorted(cand, cand + 1 + wc).astype(np.int64)
-        g = np.append(g, c)  # sentinel fixpoint
+        g = np.append(np.searchsorted(cand, cand + 1 + wc), c)  # sentinel
         # orbit of candidate 0 (the first candidate IS the first multi
         # token: every byte before it is a 1-byte token) by doubling
         pos = np.array([0], dtype=np.int64)
@@ -531,38 +537,49 @@ def compact_decode(buf: bytes) -> np.ndarray:
             pos = np.concatenate([pos, gk[pos]])
             gk = gk[gk]
         pos = pos[pos < c]
-        mt = cand[pos]  # real multi-token positions, ascending
-        wm = wc[pos]
-        # drop a trailing token whose payload is cut off (malformed tail)
-        ok = mt + wm < n
+        mt, wm = cand[pos], wc[pos]  # real multi-token positions, ascending
+        if stop is not None:
+            term = np.flatnonzero(u8[mt] == stop)
+            if len(term):
+                end = int(mt[term[0]])
+                mt, wm = mt[: term[0]], wm[: term[0]]
+        ok = mt + wm < end
         if not ok.all():
-            tok_mask[mt[~ok][0]:] = False
+            # truncated trailing token: nothing at or after it is a token
+            end = int(mt[~ok][0])
             mt, wm = mt[ok], wm[ok]
-        # payload bytes are not tokens: clear per width class (<=7x7 lanes)
-        for k in range(2, 9):
-            p = mt[wm == k]
-            if len(p):
-                for j in range(1, k + 1):
-                    tok_mask[p + j] = False
+    tok_mask = np.zeros(n, dtype=bool)
+    tok_mask[:end] = True
+    # payload bytes are not tokens: clear per width class (<=7x8 lanes)
+    classes = [(k, mt[wm == k]) for k in widths]
+    for k, p in classes:
+        for j in range(1, k + 1):
+            tok_mask[p + j] = False
     pos_all = np.flatnonzero(tok_mask)
     one = is_one[pos_all]
     vals = np.empty(len(pos_all), dtype=np.int64)
     vals[one] = b[pos_all[one]]
-    if c:
-        for k in range(2, 9):
-            p = mt[wm == k]
-            if not len(p):
-                continue
-            u = np.zeros(len(p), dtype=_U64)
-            for j in range(k):
-                u = (u << _U64(8)) | u8[p + 1 + j].astype(_U64)
-            ui = u.view(np.int64)  # two's complement exact for k=8
-            if k < 8:
-                half = np.int64(1) << (8 * k - 1)
-                span = np.int64(1) << (8 * k)
-                ui = np.where(ui >= half, ui - span, ui)
-            vals[np.searchsorted(pos_all, p)] = ui
+    for k, p in classes:
+        if not len(p):
+            continue
+        u = np.zeros(len(p), dtype=_U64)
+        for j in range(k):
+            u = (u << _U64(8)) | u8[p + 1 + j].astype(_U64)
+        ui = u.view(np.int64)  # two's complement exact for k=8
+        if signed and k < 8:
+            half = np.int64(1) << (8 * k - 1)
+            ui = np.where(ui >= half, ui - (np.int64(1) << (8 * k)), ui)
+        vals[np.searchsorted(pos_all, p)] = ui
     return vals
+
+
+def compact_decode(buf: bytes) -> np.ndarray:
+    """Inverse of compact_encode (token chain walk: _token_values)."""
+    b = np.frombuffer(buf, dtype=np.int8)
+    return _token_values(
+        b, b >= _MIN_1BYTE, lambda t: t.astype(np.int64) - _TOKEN_BASE,
+        range(2, 9), signed=True,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -681,57 +698,11 @@ def resource_id_encode(ids: np.ndarray) -> bytes:
 def resource_id_decode(buf: bytes) -> np.ndarray:
     """Inverse of resource_id_encode (stops at the 255 terminator)."""
     b = np.frombuffer(buf, dtype=np.uint8)
-    n = len(b)
-    if n == 0:
-        return np.empty(0, dtype=np.int64)
-    is_one = b < _RID_SHORT  # inline id IF this byte is a token
-    cand = np.flatnonzero(~is_one)  # 253/254/255-looking bytes
-    tok_mask = np.ones(n, dtype=bool)
-    end_at = n
-    if len(cand):
-        wc = np.where(b[cand] == _RID_SHORT, 2, np.where(b[cand] == _RID_INT, 4, 0))
-        g = np.searchsorted(cand, cand + 1 + wc).astype(np.int64)
-        g = np.append(g, len(cand))
-        pos = np.array([0], dtype=np.int64)
-        gk = g
-        while pos[-1] < len(cand):
-            pos = np.concatenate([pos, gk[pos]])
-            gk = gk[gk]
-        pos = pos[pos < len(cand)]
-        mt = cand[pos]
-        wm = wc[pos]
-        # terminator: first reached 255 ends the stream
-        term = np.flatnonzero(b[mt] == _RID_END)
-        if len(term):
-            cut = int(term[0])
-            end_at = int(mt[cut])
-            mt, wm = mt[:cut], wm[:cut]
-        ok = mt + wm < end_at
-        if not ok.all():
-            # truncated trailing token: drop it AND everything after it
-            # (its token byte and orphaned payload bytes are not tokens)
-            end_at = int(mt[~ok][0])
-            mt, wm = mt[ok], wm[ok]
-        for k in (2, 4):
-            p = mt[wm == k]
-            if len(p):
-                for j in range(1, k + 1):
-                    tok_mask[p + j] = False
-    tok_mask[end_at:] = False
-    pos_all = np.flatnonzero(tok_mask)
-    one = is_one[pos_all]
-    vals = np.empty(len(pos_all), dtype=np.int64)
-    vals[one] = b[pos_all[one]]
-    if len(cand):
-        for k in (2, 4):
-            p = mt[wm == k]
-            if not len(p):
-                continue
-            u = np.zeros(len(p), dtype=np.int64)
-            for j in range(k):
-                u = (u << 8) | b[p + 1 + j].astype(np.int64)
-            vals[np.searchsorted(pos_all, p)] = u
-    return vals
+    return _token_values(
+        b, b < _RID_SHORT,
+        lambda t: np.where(t == _RID_SHORT, 2, np.where(t == _RID_INT, 4, 0)),
+        (2, 4), stop=_RID_END,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -787,44 +758,9 @@ def ts_token_decode(buf: bytes, n: int) -> np.ndarray:
     if n == 1:
         return np.array([t0], dtype=np.int64)
     b = np.frombuffer(buf[8:], dtype=np.uint8)
-    is_one = b < _TS_SHORT
-    cand = np.flatnonzero(~is_one)
-    tok_mask = np.ones(len(b), dtype=bool)
-    mt = np.empty(0, dtype=np.int64)
-    wm = np.empty(0, dtype=np.int64)
-    if len(cand):
-        wc = np.where(b[cand] == _TS_SHORT, 2, 4)
-        g = np.searchsorted(cand, cand + 1 + wc).astype(np.int64)
-        g = np.append(g, len(cand))
-        pos = np.array([0], dtype=np.int64)
-        gk = g
-        while pos[-1] < len(cand):
-            pos = np.concatenate([pos, gk[pos]])
-            gk = gk[gk]
-        pos = pos[pos < len(cand)]
-        mt, wm = cand[pos], wc[pos]
-        ok = mt + wm < len(b)
-        if not ok.all():
-            # truncated trailing token: nothing at or after it is a token
-            tok_mask[mt[~ok][0]:] = False
-            mt, wm = mt[ok], wm[ok]
-        for k in (2, 4):
-            p = mt[wm == k]
-            if len(p):
-                for j in range(1, k + 1):
-                    tok_mask[p + j] = False
-    pos_all = np.flatnonzero(tok_mask)
-    d = np.empty(len(pos_all), dtype=np.int64)
-    one = is_one[pos_all]
-    d[one] = b[pos_all[one]]
-    for k in (2, 4):
-        p = mt[wm == k]
-        if not len(p):
-            continue
-        u = np.zeros(len(p), dtype=np.int64)
-        for j in range(k):
-            u = (u << 8) | b[p + 1 + j].astype(np.int64)
-        d[np.searchsorted(pos_all, p)] = u
+    d = _token_values(
+        b, b < _TS_SHORT, lambda t: np.where(t == _TS_SHORT, 2, 4), (2, 4)
+    )
     out = np.empty(n, dtype=np.int64)
     out[0] = t0
     deltas = np.zeros(n - 1, dtype=np.int64)

@@ -646,6 +646,7 @@ def ts_token_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     from . import codecs
+    from .chunks import group_starts
 
     ev = (
         load(spark, sf_dir, "events")
@@ -661,8 +662,7 @@ def ts_token_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            gid = pdf["event_type"].ne(pdf["event_type"].shift()).to_numpy().cumsum()
-            starts = np.flatnonzero(np.diff(gid, prepend=gid[0] - 1))
+            starts = group_starts(pdf, ["event_type"])
             ends = np.append(starts[1:], len(pdf))
             t = pdf["ts_ms"].to_numpy(np.int64)
             outs = []

@@ -35,6 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .. import codecs
+from ..chunks import carry_groups
 
 
 def _encode_batch(
@@ -131,44 +132,25 @@ def encode_archive(
     """(series, ts_ms, value_long) -> (series, n, record binary).
 
     One record per series per partition: groups are hash-repartitioned on
-    the series key and a carry buffer (same pattern as
-    chunks.encode_chunks) merges groups that span Arrow batches, so the
+    the series key and the chunk kernels' carry buffer
+    (chunks.carry_groups) merges groups that span Arrow batches, so the
     'one binary record per series' contract holds regardless of Arrow
     batch size."""
     out_schema = f"{series} string, n bigint, record binary"
 
-    def _flush(pdf: pd.DataFrame):
-        gid = pdf[series].ne(pdf[series].shift()).to_numpy().cumsum()
-        starts = np.flatnonzero(np.diff(gid, prepend=gid[0] - 1))
-        ends = np.append(starts[1:], len(pdf))
-        t = pdf[ts_ms].to_numpy(np.int64)
-        v = pdf[value_long].to_numpy(np.int64)
-        names = [pdf[series].iloc[s] for s in starts]
-        return pd.DataFrame(
-            {
-                series: names,
-                "n": ends - starts,
-                "record": _encode_batch(names, t, v, starts, ends),
-            }
-        )
-
     def enc(batches):
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            last = pdf[series].iloc[-1]
-            tail = (pdf[series] == last).to_numpy()
-            cut = len(pdf) - int(
-                np.argmin(tail[::-1]) if not tail.all() else len(pdf)
+        for pdf, starts in carry_groups(batches, [series]):
+            ends = np.append(starts[1:], len(pdf))
+            t = pdf[ts_ms].to_numpy(np.int64)
+            v = pdf[value_long].to_numpy(np.int64)
+            names = pdf[series].to_numpy()[starts].tolist()
+            yield pd.DataFrame(
+                {
+                    series: names,
+                    "n": ends - starts,
+                    "record": _encode_batch(names, t, v, starts, ends),
+                }
             )
-            head, carry = pdf.iloc[:cut], pdf.iloc[cut:].copy()
-            if len(head):
-                yield _flush(head)
-        if carry is not None and len(carry):
-            yield _flush(carry)
 
     return (
         df.repartition(series)

@@ -7,7 +7,10 @@ The reference writes through the Prometheus TSDB library, which compacts
 (prometheus/tsdb compactor; our sink's 2h blocks mirror its head-block
 granularity — see chunks.py W3). On a table-backed sink the same
 operation is a per-partition rewrite: decode every chunk of a day,
-re-encode at the larger block size, overwrite the day atomically.
+re-encode at the larger block size, overwrite the day atomically. A
+source chunk that straddles target blocks (2h chunks into 3h blocks) is
+routed to every block it overlaps and each copy keeps that block's
+samples, so there is one compaction path for every block size.
 
 Properties:
 * lossless — decode(compacted) == decode(source), proven by fingerprint
@@ -57,47 +60,6 @@ ROWS_PER_TASK = 50_000
 ROWS_PER_BATCH = 2_000_000
 
 
-def _murmur3_int(x: int, seed: int = 42) -> int:
-    """Murmur3_x86_32 of one 4-byte little-endian int — the public
-    algorithm behind Spark's ``hash()`` and its HashPartitioning
-    (tests/test_pipeline.py pins equality against F.hash, so an engine
-    drift fails loudly instead of silently skewing placement)."""
-    c1, c2, m = 0xCC9E2D51, 0x1B873593, 0xFFFFFFFF
-
-    def rotl(v: int, r: int) -> int:
-        return ((v << r) | (v >> (32 - r))) & m
-
-    k = (x & m) * c1 & m
-    k = rotl(k, 15) * c2 & m
-    h = (seed ^ k) & m
-    h = (rotl(h, 13) * 5 + 0xE6546B64) & m
-    h ^= 4  # total bytes hashed
-    h ^= h >> 16
-    h = h * 0x85EBCA6B & m
-    h ^= h >> 13
-    h = h * 0xC2B2AE35 & m
-    h ^= h >> 16
-    return h if h < 0x80000000 else h - 0x100000000
-
-
-def _probe_values(n: int) -> list[int]:
-    """probe[i] = smallest int j with pmod(murmur3(j), n) == i, i.e. a
-    value Spark's hash partitioner places in partition i of n. Mapping
-    the task index through this table makes ``repartition(n, col)`` an
-    EXACT placement (one (day, bucket) group per task, zero collisions)
-    without the extra sampling pass a range exchange runs over the
-    child plan."""
-    probe: list[int | None] = [None] * n
-    found, j = 0, 0
-    while found < n:
-        p = _murmur3_int(j) % n
-        if probe[p] is None:
-            probe[p] = j
-            found += 1
-        j += 1
-    return probe  # type: ignore[return-value]
-
-
 def compact(
     spark: SparkSession,
     root: str,
@@ -105,9 +67,7 @@ def compact(
     dst_table: str = "chunks_1d",
     block_s: int = 86_400,
     job_id: str = "compact",
-    salt: int = 1,
     rows_per_task: int = ROWS_PER_TASK,
-    days_per_batch: int | None = None,
     rows_per_batch: int = ROWS_PER_BATCH,
 ) -> dict[str, int]:
     """Compact src_table's blocks into block_s-sized blocks in dst_table.
@@ -131,7 +91,6 @@ def compact(
     # ONE stats scan drives everything: the to-do list, the batch slices,
     # and the per-batch task count. Driver-resident frame is one row per
     # DAY (365 rows/year — not a scale concern).
-    step_ms = block_s * 1000
     stats_rows = (
         src.groupBy("part")
         .agg(
@@ -147,23 +106,9 @@ def compact(
                     != (F.col("t_max_ms") / 86_400_000).cast("long")
                 ).cast("long")
             ).alias("n_crossing"),
-            # blocks that do not NEST inside one target block: the fused
-            # chunk-level recode (chunks.recode_chunks) groups source
-            # chunks by floor(block_start/step), which is only correct
-            # when each chunk's samples stay in that target block —
-            # guaranteed for compaction (source block divides the target)
-            # but not for a foreign table; those fall back to the
-            # sample-level decode+encode pair below
-            F.sum(
-                (
-                    (F.col("block_start_ms") / step_ms).cast("long")
-                    != (F.col("t_max_ms") / step_ms).cast("long")
-                ).cast("long")
-            ).alias("n_nonnested"),
         )
         .collect()
     )
-    nested = not any(int(r["n_nonnested"]) for r in stats_rows)
     crossing = {str(r["part"]): int(r["n_crossing"]) for r in stats_rows}
     if any(crossing.values()):
         bad = sorted(d for d, c in crossing.items() if c)[:5]
@@ -188,17 +133,13 @@ def compact(
     # own select -> re-encode -> commit cycle, so peak cached state is
     # one batch and a mid-backlog crash resumes from the last batch's
     # lineage. A day always lands whole in one batch; a huge day gets a
-    # batch of its own; days_per_batch, when given, additionally caps
-    # the day count (test/ops hook).
+    # batch of its own.
     batches: list[list[str]] = []
     cur: list[str] = []
     cur_rows = 0
     for d in todo:
         nd = day_stats[d][0]
-        full = (days_per_batch is not None and len(cur) >= days_per_batch) or (
-            cur and cur_rows + nd > rows_per_batch
-        )
-        if full:
+        if cur and cur_rows + nd > rows_per_batch:
             batches.append(cur)
             cur, cur_rows = [], 0
         cur.append(d)
@@ -256,47 +197,18 @@ def compact(
         tidx = F.coalesce(F.col("_base"), F.lit(0)) + F.pmod(
             F.xxhash64(*SERIES), F.coalesce(F.col("_salt"), F.lit(1))
         )
-        if nested:
-            # fused chunk-level recode: ONE shuffle of the ENCODED chunk
-            # rows (never the decoded samples) + ONE Python crossing —
-            # the salt/index join runs on chunk rows before the exchange.
-            # The task index maps through the murmur3 probe table so the
-            # hash exchange places each (day, bucket) group in its own
-            # task exactly (no sampling pass, no collision skew).
-            probes = F.array(*[F.lit(p) for p in _probe_values(n_tasks)])
-            tagged = sel.join(F.broadcast(salt_df), "part", "left").withColumn(
-                "_tidx", F.element_at(probes, tidx.cast("int") + 1)
-            )
-            recoded = chunks.recode_chunks(
-                tagged,
-                series=SERIES,
-                block_s=block_s,
-                partition_col="_tidx",
-                num_partitions=n_tasks,
-            )
-        else:
-            # foreign source whose blocks straddle target blocks: decode
-            # to samples, re-bucket per sample, encode (two crossings)
-            samples = chunks.decode_chunks(sel, series=SERIES).select(
-                *SERIES, F.timestamp_millis("ts_ms").alias("ts"), "value"
-            )
-            recoded = chunks.encode_chunks(
-                samples, series=SERIES, ts="ts", value="value",
-                block_s=block_s, salt=salt,
-            )
-        recoded = recoded.withColumn(
+        # ONE shuffle of the ENCODED chunk rows (never the decoded
+        # samples) + ONE Python crossing; repartitionById places each
+        # (day, bucket) group in its own task exactly
+        tagged = sel.join(F.broadcast(salt_df), "part", "left").withColumn(
+            "_tidx", tidx.cast("int")
+        )
+        recoded = chunks.recode_chunks(
+            tagged, "_tidx", n_tasks, series=SERIES, block_s=block_s
+        ).withColumn(
             "part",
             F.date_format(F.timestamp_millis("block_start_ms"), "yyyy-MM-dd"),
         )
-        if not nested:
-            probes = F.array(*[F.lit(p) for p in _probe_values(n_tasks)])
-            recoded = (
-                recoded.join(F.broadcast(salt_df), "part", "left")
-                .repartition(
-                    n_tasks, F.element_at(probes, tidx.cast("int") + 1)
-                )
-                .drop("_salt", "_base")
-            )
         t0 = time.monotonic()
         tot["dst_chunks"] += _commit(
             spark, root, job_id, dst_table, recoded, t0

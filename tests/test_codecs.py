@@ -257,3 +257,45 @@ def test_ts_token_wire_bytes():
     buf = codecs.ts_token_encode(ts)
     assert buf[:8] == (1000).to_bytes(8, "big")
     assert buf[8:] == bytes([5, 252, 1, 44, 253, 0, 1, 17, 112])
+
+
+def _golden_inputs(n):
+    if n == 5:
+        t = 1_700_000_000_000 + np.array([0, 1000, 2000, 3015, 5000], np.int64)
+        return t, np.array([1.0, 1.0, 2.5, -3.25, 997.4038])
+    i = np.arange(n, dtype=np.int64)
+    t = 1_700_000_000_000 + 15_000 * i
+    # one dod in each payload class: 7, 11, 17 and 64 bits
+    t[10:] += 37
+    t[40:] += 900
+    t[70:] += 60_000
+    t[100:] += 10**9
+    return t, np.where(i % 8 == 0, i * 0.25, np.floor(i / 8) * 1.5)
+
+
+@pytest.mark.parametrize(
+    "n, ts_hex, val_hex",
+    [
+        # n <= _SMALL_N: the scalar encoders
+        (5, "0068e5cf8b010000b044fa07bca0",
+         "000000000000f03f7009a03c1c00ffec00780852b3afb7e910"),
+        # n > _SMALL_N: the vectorized encoders
+        (120,
+         "0068e5cf8b010000806000000180000006000000180000816bc03a984a93c238"
+         "3f5303a97e00000000ee6b280000000000ee6b27fe",
+         "0000000000000000018181818181818181818181818180082130262c2582c0d4"
+         "2a83508a1542b03606c1162ac2588b1562ac4584d1182b03602c1582b040ffff"
+         "fefb9ffdddf35f73fdf6373fc8"),
+    ],
+)
+def test_chunk_wire_bytes(n, ts_hex, val_hex):
+    """Pins the stored chunk format. ts_chunk: [8B t0 LE][1-bit nonzero
+    flags x (n-1)][2-bit codes x nnz][payloads]; val_chunk: [8B v0 LE]
+    [1-bit flags x (n-1)][11-bit headers x nnz][payloads], each section
+    padded to a byte. At n=5 the dods are 1000, 0, 15, 970: flags 1011,
+    codes 01 00 01, payloads zigzag 2000/11b, 30/7b, 1940/11b."""
+    t, v = _golden_inputs(n)
+    assert codecs.dod_encode(t).hex() == ts_hex
+    assert codecs.xor_encode(v).hex() == val_hex
+    assert np.array_equal(codecs.dod_decode(bytes.fromhex(ts_hex), n), t)
+    assert np.array_equal(codecs.xor_decode(bytes.fromhex(val_hex), n), v)

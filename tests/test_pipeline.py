@@ -289,26 +289,6 @@ def test_lineage_read_failures_propagate(spark, tmp_path):
     assert "parquet" in str(ei.value).lower() or "Parquet" in str(ei.value)
 
 
-def test_murmur3_probe_matches_spark_hash_partitioning(spark):
-    """compact's exact task placement inverts Spark's int hash: the
-    python murmur3 must equal F.hash() (Murmur3, seed 42) — the same
-    expression HashPartitioning uses — and every probe value must land
-    in its own partition. Pinned so a Spark hash change fails loudly
-    instead of silently re-introducing collision skew."""
-    from jobs.compact import _murmur3_int, _probe_values
-
-    vals = list(range(-5, 40)) + [2**31 - 1, -(2**31)]
-    got = (
-        spark.createDataFrame([(v,) for v in vals], "x int")
-        .select(F.hash("x").alias("h"))
-        .collect()
-    )
-    assert [r["h"] for r in got] == [_murmur3_int(v) for v in vals]
-    for n in (1, 7, 30, 64):
-        probes = _probe_values(n)
-        assert [_murmur3_int(p) % n for p in probes] == list(range(n))
-
-
 def test_compact_scale_defaults(spark, tmp_path):
     """Round-5 scale defaults: (a) a day whose chunk-row count exceeds
     rows_per_task re-encodes across MULTIPLE tasks (multiple output files
@@ -354,7 +334,7 @@ def test_compact_scale_defaults(spark, tmp_path):
     assert per_day[big_day] > 50  # exceeds rows_per_task below
 
     stats = compact_job.compact(
-        spark, out, rows_per_task=50, days_per_batch=2
+        spark, out, rows_per_task=50, rows_per_batch=240
     )
     assert stats["dst_chunks"] < stats["src_chunks"]
 
@@ -391,7 +371,90 @@ def test_compact_scale_defaults(spark, tmp_path):
 
     dst = spark.read.parquet(os.path.join(out, "chunks_1d"))
     assert fp(src) == fp(dst)
-    assert compact_job.compact(spark, out, rows_per_task=50, days_per_batch=2) == {}
+    assert compact_job.compact(
+        spark, out, rows_per_task=50, rows_per_batch=240
+    ) == {}
+
+
+def _sample_fingerprint(df):
+    from gfs_to_prometheus_spark import chunks as chunks_mod
+
+    s = chunks_mod.decode_chunks(df, series=("series_key",))
+    (row,) = s.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(
+            F.bit_xor(F.xxhash64("series_key", "ts_ms", "value")), F.lit(0)
+        ).alias("chk"),
+    ).collect()
+    return row["n"], row["chk"]
+
+
+def test_compact_straddling_source_blocks(spark, tmp_path):
+    """3h target blocks over the pipeline's 2h chunks: every 2h block that
+    starts at 02:00 mod 6h straddles a 3h boundary. Each straddling chunk
+    goes to both target blocks and each copy keeps its own block's
+    samples — lossless, block-aligned, and a re-run is a no-op."""
+    from jobs import compact as compact_job
+
+    out = str(tmp_path / "tsdb")
+    pipeline.run(spark, out, N_DOCS, job_id="full")
+    step = 10_800_000
+    src = spark.read.parquet(os.path.join(out, "chunks"))
+    straddling = src.filter(
+        F.floor(F.col("t_min_ms") / step) != F.floor(F.col("t_max_ms") / step)
+    ).count()
+    assert straddling > 0  # the case under test actually occurs
+
+    stats = compact_job.compact(
+        spark, out, dst_table="chunks_3h", block_s=10_800
+    )
+    assert stats["samples"] == src.agg(F.sum("n")).collect()[0][0]
+    dst = spark.read.parquet(os.path.join(out, "chunks_3h"))
+    assert dst.filter(F.col("block_start_ms") % step != 0).count() == 0
+    assert dst.filter(
+        (F.col("t_min_ms") < F.col("block_start_ms"))
+        | (F.col("t_max_ms") >= F.col("block_start_ms") + step)
+    ).count() == 0
+    assert _sample_fingerprint(src) == _sample_fingerprint(dst)
+    assert compact_job.compact(
+        spark, out, dst_table="chunks_3h", block_s=10_800
+    ) == {}
+
+
+def test_compact_plan_does_not_grow_with_task_count(
+    spark, tmp_path, monkeypatch
+):
+    """Task placement is one repartitionById on the task-index column, so
+    the recoded frame's analyzed plan is the same size at 10 tasks and at
+    2000 (an embedded per-task lookup table would grow with the count)."""
+    from gfs_to_prometheus_spark import chunks as chunks_mod
+    from jobs import compact as compact_job
+
+    out = str(tmp_path / "tsdb")
+    samples = spark.range(2000).select(
+        F.concat(F.lit("s"), F.col("id").cast("string")).alias("series_key"),
+        F.timestamp_millis(F.lit(1_704_067_200_000) + F.col("id")).alias("ts"),
+        F.col("id").cast("double").alias("value"),
+    )
+    chunks_mod.encode_chunks(samples, series=("series_key",)).withColumn(
+        "part",
+        F.date_format(F.timestamp_millis("block_start_ms"), "yyyy-MM-dd"),
+    ).write.mode("overwrite").parquet(os.path.join(out, "chunks"))
+
+    planned = []
+
+    def capture(spark, root, job_id, table, df, t0, **kw):
+        planned.append(df)
+        return 0
+
+    monkeypatch.setattr(pipeline, "_commit", capture)
+    for rows_per_task in (200, 1):  # 2000 chunk rows -> 10, then 2000 tasks
+        compact_job.compact(spark, out, rows_per_task=rows_per_task)
+    sizes = [
+        len(df._jdf.queryExecution().analyzed().toJSON()) for df in planned
+    ]
+    assert len(sizes) == 2
+    assert sizes[1] < 1.1 * sizes[0], sizes
 
 
 def test_compact_rejects_day_crossing_source_blocks(spark, tmp_path):

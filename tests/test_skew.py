@@ -4,6 +4,9 @@ AQE cannot split a single applyInPandas/mapInPandas group)."""
 
 from __future__ import annotations
 
+import numpy as np
+from hypothesis import given
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from gfs_to_prometheus_spark import chunks, synth
@@ -59,3 +62,21 @@ def test_roundtrip_chunks_matches_unfused_pair(spark):
         a = sorted(map(tuple, fused.collect()))
         b = sorted(map(tuple, pair.collect()))
         assert a == b, (salt, mcs, len(a), len(b))
+
+
+@given(
+    st.lists(st.integers(1, 50), min_size=0, max_size=40),
+    st.integers(1, 16),
+)
+def test_split_runs_matches_loop(lengths, cap):
+    """The vectorized oversized-group cut equals the plain loop it
+    replaced: every run cut into cap-sized pieces from its start."""
+    bounds = np.cumsum([0] + lengths).astype(np.int64)
+    starts, ends, total = bounds[:-1], bounds[1:], int(bounds[-1])
+    want_s, want_e = [], []
+    for s, e in zip(starts, ends):
+        for c in range(s, e, cap):
+            want_s.append(c)
+            want_e.append(min(c + cap, e))
+    got_s, got_e = chunks._split_runs(starts, total, cap)
+    assert got_s.tolist() == want_s and got_e.tolist() == want_e
