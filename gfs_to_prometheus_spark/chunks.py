@@ -27,6 +27,7 @@ from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from . import codecs
@@ -45,59 +46,27 @@ def _series_schema(df: DataFrame, series: Sequence[str]) -> str:
     return ", ".join(f"{c} {by_name[c]}" for c in series)
 
 
-def _encode_payloads(
-    t_all: np.ndarray, v_all: np.ndarray, starts: np.ndarray, ends: np.ndarray
-) -> tuple[list, list]:
-    """(ts_chunk, val_chunk) bytes per [start, end) sample run.
-
-    1-sample runs are head-only chunks (8 B LE timestamp / 8 B LE float
-    bits) by the codec definition, so they are emitted from two vectorized
-    ``astype().tobytes()`` casts instead of ~1M scalar codec calls — on
-    sparse tables (75k series x 30 d at sf1 => mean chunk n ~= 1.02) this
-    is ~95% of all chunks. Byte-identical to dod_encode/xor_encode."""
-    n = ends - starts
-    ones = n == 1
-    ts_chunks: list = [None] * len(starts)
-    val_chunks: list = [None] * len(starts)
-    idx1 = np.flatnonzero(ones)
-    if len(idx1):
-        tb = t_all[starts[idx1]].astype("<i8").tobytes()
-        vb = v_all[starts[idx1]].astype("<f8").tobytes()
-        for j, i in enumerate(idx1):
-            ts_chunks[i] = tb[8 * j : 8 * j + 8]
-            val_chunks[i] = vb[8 * j : 8 * j + 8]
-    for i in np.flatnonzero(~ones):
-        s, e = starts[i], ends[i]
-        ts_chunks[i] = codecs.dod_encode(t_all[s:e])
-        val_chunks[i] = codecs.xor_encode(v_all[s:e])
-    return ts_chunks, val_chunks
+def _binary(buf: bytes, byte_offsets: np.ndarray) -> np.ndarray:
+    """Concatenated payloads + byte offsets -> one bytes object per chunk."""
+    return pa.LargeBinaryArray.from_buffers(
+        pa.large_binary(), len(byte_offsets) - 1,
+        [None, pa.py_buffer(byte_offsets), pa.py_buffer(buf)],
+    ).to_numpy(zero_copy_only=False)
 
 
-def _decode_many(
-    tcs: list, vcs: list, ns: np.ndarray
-) -> tuple[np.ndarray, np.ndarray]:
-    """Concatenated (ts, value) samples for a batch of chunks, with the
-    same vectorized head-only fast path for 1-sample chunks."""
-    total = int(ns.sum())
-    out_t = np.empty(total, np.int64)
-    out_v = np.empty(total, np.float64)
-    if not total:
-        return out_t, out_v
-    sample_starts = np.concatenate([[0], np.cumsum(ns)[:-1]])
-    ones = ns == 1
-    idx1 = np.flatnonzero(ones)
-    if len(idx1):
-        out_t[sample_starts[idx1]] = np.frombuffer(
-            b"".join(bytes(tcs[i])[:8] for i in idx1), "<i8"
-        )
-        out_v[sample_starts[idx1]] = np.frombuffer(
-            b"".join(bytes(vcs[i])[:8] for i in idx1), "<f8"
-        )
-    for i in np.flatnonzero(~ones):
-        s, n = int(sample_starts[i]), int(ns[i])
-        out_t[s : s + n] = codecs.dod_decode(bytes(tcs[i]), n)
-        out_v[s : s + n] = codecs.xor_decode(bytes(vcs[i]), n)
-    return out_t, out_v
+def _concat(col: pd.Series) -> tuple:
+    """A column of chunk payloads -> (one buffer, byte offsets)."""
+    arr = pa.array(col, type=pa.large_binary())
+    _, offs, data = arr.buffers()
+    return data or b"", np.frombuffer(offs, np.int64)[: len(arr) + 1]
+
+
+def _decode_many(pdf: pd.DataFrame, ns: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Concatenated (ts, value) samples of a frame's chunk rows."""
+    return (
+        codecs.dod_decode_many(*_concat(pdf["ts_chunk"]), ns),
+        codecs.xor_decode_many(*_concat(pdf["val_chunk"]), ns),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -157,19 +126,19 @@ def _split_runs(
 def _chunk_frame(
     pdf: pd.DataFrame, series_l: list, src_rows: np.ndarray,
     block_start: np.ndarray, t_all: np.ndarray, v_all: np.ndarray,
-    starts: np.ndarray, ends: np.ndarray,
+    offsets: np.ndarray,
 ) -> pd.DataFrame:
-    """Chunk rows for the sample runs ``[starts, ends)``; series values
-    come from ``pdf``'s ``src_rows``."""
-    ts_chunks, val_chunks = _encode_payloads(t_all, v_all, starts, ends)
+    """Chunk rows for the sample runs ``offsets[i]:offsets[i+1]``, which
+    partition ``t_all``/``v_all``; series values come from ``pdf``'s
+    ``src_rows``."""
     rows = {c: pdf[c].to_numpy()[src_rows] for c in series_l}
     rows.update(
         block_start_ms=block_start,
-        n=ends - starts,
-        t_min_ms=t_all[starts],
-        t_max_ms=t_all[ends - 1],
-        ts_chunk=ts_chunks,
-        val_chunk=val_chunks,
+        n=np.diff(offsets),
+        t_min_ms=t_all[offsets[:-1]],
+        t_max_ms=t_all[offsets[1:] - 1],
+        ts_chunk=_binary(*codecs.dod_encode_many(t_all, offsets)),
+        val_chunk=_binary(*codecs.xor_encode_many(v_all, offsets)),
         codec=CODEC_NAME,
     )
     return pd.DataFrame(rows)
@@ -178,7 +147,7 @@ def _chunk_frame(
 def _expand(pdf: pd.DataFrame, series_l: list) -> pd.DataFrame:
     """Chunk rows -> one (series..., ts_ms, value) row per sample."""
     ns = pdf["n"].to_numpy(np.int64)
-    t, v = _decode_many(pdf["ts_chunk"].tolist(), pdf["val_chunk"].tolist(), ns)
+    t, v = _decode_many(pdf, ns)
     d = {c: np.repeat(pdf[c].to_numpy(), ns) for c in series_l}
     d["ts_ms"] = t
     d["value"] = v
@@ -242,9 +211,11 @@ def _encode_pipeline(
         for pdf, starts in carry_groups(batches, keys, max_chunk_samples):
             t_all = pdf["_ts_ms"].to_numpy(np.int64)
             v_all = pdf["_val"].to_numpy(np.float64)
-            s, e = _split_runs(starts, len(pdf), max_chunk_samples)
+            s, _ = _split_runs(starts, len(pdf), max_chunk_samples)
             block = pdf["_block"].to_numpy(np.int64)[s]
-            yield _chunk_frame(pdf, series_l, s, block, t_all, v_all, s, e)
+            yield _chunk_frame(
+                pdf, series_l, s, block, t_all, v_all, np.append(s, len(pdf))
+            )
 
     return sorted_base, heads
 
@@ -380,9 +351,7 @@ def recode_chunks(
     def recode(batches):
         for pdf, starts in carry_groups(batches, keys):
             ns = pdf["n"].to_numpy(np.int64)
-            t_all, v_all = _decode_many(
-                pdf["ts_chunk"].tolist(), pdf["val_chunk"].tolist(), ns
-            )
+            t_all, v_all = _decode_many(pdf, ns)
             nb = pdf["_nb"].to_numpy(np.int64)[starts]
             g = np.repeat(np.arange(len(starts)), np.add.reduceat(ns, starts))
             # keep the samples inside the group's block (a straddling
@@ -392,12 +361,12 @@ def recode_chunks(
             keep = np.flatnonzero((t_all >= nb[g]) & (t_all < nb[g] + step_ms))
             order = keep[np.lexsort((t_all[keep], g[keep]))]
             t_all, v_all, g = t_all[order], v_all[order], g[order]
-            s, e = _split_runs(
+            s, _ = _split_runs(
                 np.flatnonzero(np.diff(g, prepend=-1)), len(g), max_chunk_samples
             )
             gs = g[s]
             yield _chunk_frame(
-                pdf, series_l, starts[gs], nb[gs], t_all, v_all, s, e
+                pdf, series_l, starts[gs], nb[gs], t_all, v_all, np.append(s, len(g))
             )
 
     return rep.mapInPandas(recode, schema=out_schema)

@@ -34,8 +34,17 @@ vectorized numpy end-to-end:
              -> np.bitwise_xor.accumulate
 
 Same asymptotic compression as interleaved Gorilla (identical per-sample
-bit cost modulo padding <= 3 bytes/section); an order of magnitude faster
-to decode in Python because nothing is per-sample.
+bit cost modulo padding <= 3 bytes/section).
+
+Each format has ONE implementation, batched: ``dod_encode_many`` /
+``xor_encode_many`` pack every chunk of an Arrow batch (sample offsets in,
+concatenated bytes + byte offsets out) and ``dod_decode_many`` /
+``xor_decode_many`` invert them, in a fixed number of whole-batch numpy
+calls whatever the chunk lengths — nothing is per-sample or per-chunk.
+``dod_encode``/``xor_encode`` and their decoders are one-chunk calls of
+the same functions. Decode checks every chunk's stored length against the
+length its n, flags and headers imply and raises ValueError naming the
+chunk, so a damaged chunk never reads its neighbour's bytes.
 """
 
 from __future__ import annotations
@@ -46,8 +55,13 @@ _U64 = np.uint64
 _ALL1 = np.uint64(0xFFFFFFFFFFFFFFFF)
 
 # ---------------------------------------------------------------------------
-# bit-section helpers (all vectorized)
+# batched bit sections: the one layout, put and get behind both chunk formats
 # ---------------------------------------------------------------------------
+# A batch is m chunks over concatenated samples: chunk c holds samples
+# offsets[c]:offsets[c+1]. Every field of every chunk gets an absolute bit
+# position in the batch's output, so each codec is a fixed number of whole-
+# batch numpy calls whatever the chunk lengths; per-chunk restarts (ranks,
+# running sums) are global prefix sums minus the prefix at each chunk head.
 
 
 def _zigzag(v: np.ndarray) -> np.ndarray:
@@ -63,108 +77,125 @@ def _unzigzag(u: np.ndarray) -> np.ndarray:
     return half ^ -(u & _U64(1)).astype(np.int64)
 
 
-def _pack_var(vals: np.ndarray, nbits: np.ndarray) -> bytes:
-    """Pack vals[i]'s low nbits[i] bits (<=64 each), MSB-first, padded to
-    a whole byte. Vectorized bit scatter via searchsorted."""
-    vals = np.ascontiguousarray(vals, dtype=_U64)
-    nbits = np.ascontiguousarray(nbits, dtype=np.int64)
-    ends = np.cumsum(nbits)
-    total = int(ends[-1]) if len(ends) else 0
-    if total == 0:
-        return b""
-    starts = ends - nbits
-    idx = np.arange(total, dtype=np.int64)
-    elem = np.repeat(np.arange(len(nbits), dtype=np.int64), nbits)
-    shift = (nbits[elem] - 1 - (idx - starts[elem])).astype(_U64)
-    bits = ((vals[elem] >> shift) & _U64(1)).astype(np.uint8)
-    return np.packbits(bits).tobytes()
+def _cum(x) -> np.ndarray:
+    """Exclusive prefix sums with the total appended (len(x) + 1)."""
+    return np.concatenate([np.zeros(1, np.int64), np.cumsum(x, dtype=np.int64)])
 
 
-def _pack_fixed(vals: np.ndarray, width: int) -> bytes:
-    if len(vals) == 0:
-        return b""
-    return _pack_var(vals, np.full(len(vals), width, dtype=np.int64))
+def _split(n: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(sample index of each nonempty chunk's head, mask of later samples)."""
+    heads = (np.cumsum(n) - n)[n > 0]
+    later = np.ones(int(n.sum()), dtype=bool)
+    later[heads] = False
+    return heads, later
 
 
-def _unpack_fixed(bits: np.ndarray, start: int, count: int, width: int) -> np.ndarray:
-    """Extract `count` fixed-`width` fields starting at bit `start`."""
-    if count == 0:
-        return np.empty(0, dtype=_U64)
-    seg = bits[start : start + count * width].reshape(count, width).astype(_U64)
-    weights = _U64(1) << np.arange(width - 1, -1, -1, dtype=_U64)
-    return seg @ weights
+def _layout(n, k, hdr_w: int, pay_bits) -> np.ndarray:
+    """Byte size of each chunk's sections -> (m, 4): the 8-byte head, the
+    1-bit flags x (n-1), the ``hdr_w``-bit headers x k (one per set flag)
+    and ``pay_bits`` of payload, each section padded to a byte."""
+    bits = np.stack(
+        np.broadcast_arrays(64 * (n > 0), np.maximum(n - 1, 0), hdr_w * k, pay_bits),
+        axis=1,
+    )
+    return (bits + 7) // 8
 
 
-def _unpack_var(bits: np.ndarray, start: int, widths: np.ndarray) -> np.ndarray:
-    """Extract len(widths) variable-width fields (each >=1 bit) starting at
-    bit `start`. Vectorized via per-bit shifts + add.reduceat."""
-    widths = widths.astype(np.int64)
-    n = len(widths)
-    if n == 0:
-        return np.empty(0, dtype=_U64)
-    ends = np.cumsum(widths)
-    total = int(ends[-1])
-    starts = ends - widths
-    idx = np.arange(total, dtype=np.int64)
-    elem = np.repeat(np.arange(n, dtype=np.int64), widths)
-    shift = (widths[elem] - 1 - (idx - starts[elem])).astype(_U64)
-    terms = bits[start : start + total].astype(_U64) << shift
-    return np.add.reduceat(terms, starts)
+def _starts(byte_start: np.ndarray, sizes: np.ndarray) -> np.ndarray:
+    """Absolute bit position of each chunk's sections -> (m, 4)."""
+    return 8 * (byte_start[:, None] + np.cumsum(sizes, axis=1) - sizes)
 
 
-def _bits_of(buf: bytes) -> np.ndarray:
-    return np.unpackbits(np.frombuffer(buf, dtype=np.uint8))
+def _put(words: np.ndarray, pos: np.ndarray, width, vals) -> None:
+    """OR each value's low ``width`` (1..64) bits, MSB first, into the
+    big-endian bit stream ``words`` at bit ``pos``. A field touches at most
+    two words; ``s`` is the room left after it in its first word."""
+    v = np.broadcast_to(np.asarray(vals, dtype=_U64), pos.shape)
+    s = 64 - (pos & 63) - width
+    first = np.where(
+        s >= 0, v << np.maximum(s, 0).astype(_U64), v >> np.maximum(-s, 0).astype(_U64)
+    )
+    np.bitwise_or.at(words, pos >> 6, first)
+    spill = s < 0
+    rest = v[spill] << (64 + s[spill]).astype(_U64)
+    np.bitwise_or.at(words, (pos >> 6)[spill] + 1, rest)
 
 
-def _pad_bits(nbits: int) -> int:
-    return (nbits + 7) // 8 * 8
+def _get(words: np.ndarray, pos: np.ndarray, width) -> np.ndarray:
+    """The ``width``-bit (1..64) fields at bit ``pos`` of ``words`` (which
+    ends with a spare zero word)."""
+    w = pos >> 6
+    off = (pos & 63).astype(_U64)
+    # two shifts, so that off == 0 shifts the next word out entirely
+    top = (words[w] << off) | ((words[w + 1] >> _U64(1)) >> (_U64(63) - off))
+    return top >> (64 - np.asarray(width, dtype=np.int64)).astype(_U64)
 
 
-# ---------------------------------------------------------------------------
-# small-chunk scalar fast paths
-# ---------------------------------------------------------------------------
-# A 14-sample chunk pays ~40 numpy-call overheads (~100+ us) through the
-# vectorized path; plain-int Python does the same work in ~10 us. Encode and
-# decode dispatch on n: below _SMALL_N the scalar twins run, producing
-# byte-identical output (hypothesis-tested equality in tests/test_codecs.py).
-_SMALL_N = 96
-_M64 = (1 << 64) - 1
+def _pack(n, head, nz, hdr, hdr_w: int, pay, pay_w) -> tuple[bytes, np.ndarray]:
+    """Write a batch of chunks -> (bytes, per-chunk byte offsets). ``head``:
+    each nonempty chunk's first sample as raw bits; ``nz``: the flag of
+    every later sample; ``hdr``/``pay``/``pay_w``: the header, payload and
+    payload width of each set flag, in sample order."""
+    body = np.maximum(n - 1, 0)
+    c_body = np.repeat(np.arange(len(n)), body)
+    bo = _cum(body)
+    kb = _cum(nz)[bo]  # index of each chunk's first set flag
+    wc = _cum(pay_w)
+    sizes = _layout(n, np.diff(kb), hdr_w, np.diff(wc[kb]))
+    byte_off = _cum(sizes.sum(axis=1))
+    sec = _starts(byte_off[:-1], sizes)
+    c_nz = c_body[nz]
+    words = np.zeros(int(byte_off[-1]) // 8 + 2, dtype=_U64)
+    # the head is stored little-endian: byte-swap it into the big-endian stream
+    _put(words, sec[n > 0, 0], 64, np.asarray(head, dtype=_U64).byteswap())
+    _put(words, sec[c_nz, 1] + np.flatnonzero(nz) - bo[c_nz], 1, 1)
+    _put(words, sec[c_nz, 2] + hdr_w * (np.arange(len(c_nz)) - kb[c_nz]), hdr_w, hdr)
+    _put(words, sec[c_nz, 3] + wc[:-1] - wc[kb[c_nz]], pay_w, pay)
+    return words.astype(">u8").tobytes()[: byte_off[-1]], byte_off
 
 
-def _pack_sections_scalar(sections: list[list[tuple[int, int]]]) -> bytes:
-    """Each section = [(value, nbits)...], MSB-first, padded to a byte."""
-    out = b""
-    for pairs in sections:
-        acc = 0
-        total = 0
-        for v, nb in pairs:
-            acc = (acc << nb) | (v & ((1 << nb) - 1))
-            total += nb
-        if total:
-            pad = (-total) % 8
-            out += (acc << pad).to_bytes((total + pad) // 8, "big")
-    return out
+def _unpack(buf, byte_offsets, n, hdr_w: int, width_of, what: str):
+    """Read a batch of chunks -> (head bits per nonempty chunk, flag per
+    later sample, header and payload per set flag, chunk of each set flag).
 
+    Each chunk's stored length is checked one section at a time against
+    the length its n, then its flags, then its headers imply, BEFORE that
+    section is read, so no field is ever read from a neighbour's bytes."""
+    b = np.frombuffer(buf, dtype=np.uint8)
+    words = np.zeros(len(b) // 8 + 2, dtype=">u8")
+    words.view(np.uint8)[: len(b)] = b
+    words = words.astype(_U64)
+    byte_offsets = np.asarray(byte_offsets, dtype=np.int64)
+    have = np.diff(byte_offsets)
 
-def _wrap64(x: int) -> int:
-    """Two's-complement int64 wrap (match numpy's int64 arithmetic)."""
-    return ((x + (1 << 63)) & _M64) - (1 << 63)
+    def sections(k, pay_bits, upto: int, basis: str) -> np.ndarray:
+        sizes = _layout(n, k, hdr_w, pay_bits)
+        need = sizes[:, :upto].sum(axis=1)
+        exact = upto == 4
+        bad = np.flatnonzero(need != have if exact else need > have)
+        if len(bad):
+            i = bad[0]
+            raise ValueError(
+                f"{what} {i} of the batch has {have[i]} bytes; n={n[i]}{basis} "
+                f"implies {'exactly' if exact else 'at least'} {need[i]}"
+            )
+        return _starts(byte_offsets[:-1], sizes)
 
-
-class _BitReader:
-    __slots__ = ("acc", "total", "pos")
-
-    def __init__(self, buf: bytes):
-        self.acc = int.from_bytes(buf, "big")
-        self.total = len(buf) * 8
-        self.pos = 0
-
-    def take(self, nb: int) -> int:
-        self.pos += nb
-        return (self.acc >> (self.total - self.pos)) & ((1 << nb) - 1)
-
-    def align(self) -> None:
-        self.pos += (-self.pos) % 8
+    body = np.maximum(n - 1, 0)
+    c_body = np.repeat(np.arange(len(n)), body)
+    bo = _cum(body)
+    sec = sections(0, 0, 2, "")
+    head = _get(words, sec[n > 0, 0], 64).byteswap()
+    nz = _get(words, sec[c_body, 1] + np.arange(len(c_body)) - bo[c_body], 1) == 1
+    kb = _cum(nz)[bo]
+    c_nz = c_body[nz]
+    sec = sections(np.diff(kb), 0, 3, " with its flags")
+    hdr = _get(words, sec[c_nz, 2] + hdr_w * (np.arange(len(c_nz)) - kb[c_nz]), hdr_w)
+    pay_w = width_of(hdr)
+    wc = _cum(pay_w)
+    sec = sections(np.diff(kb), np.diff(wc[kb]), 4, " with its flags and headers")
+    pay = _get(words, sec[c_nz, 3] + wc[:-1] - wc[kb[c_nz]], pay_w)
+    return head, nz, hdr, pay, c_nz
 
 
 # ---------------------------------------------------------------------------
@@ -173,124 +204,55 @@ class _BitReader:
 
 #: 2-bit bucket code (for nonzero dods) -> zigzag payload width
 _DOD_WIDTHS = np.array([7, 11, 17, 64], dtype=np.int64)
+_DOD_LIMITS = _U64(1) << _DOD_WIDTHS[:3].astype(_U64)
 
 
-def _dod_encode_small(ts: np.ndarray) -> bytes:
-    t = [int(x) for x in ts]
-    n = len(t)
-    head = t[0].to_bytes(8, "little", signed=True)
-    if n == 1:
-        return head
-    flags: list[tuple[int, int]] = []
-    codes: list[tuple[int, int]] = []
-    pays: list[tuple[int, int]] = []
-    prev_d = 0
-    prev = t[0]
-    for i in range(1, n):
-        d = _wrap64(t[i] - prev)
-        dod = _wrap64(d - prev_d)
-        prev, prev_d = t[i], d
-        z = ((dod << 1) ^ (dod >> 63)) & _M64
-        if z == 0:
-            flags.append((0, 1))
-            continue
-        flags.append((1, 1))
-        if z < (1 << 7):
-            codes.append((0, 2)); pays.append((z, 7))
-        elif z < (1 << 11):
-            codes.append((1, 2)); pays.append((z, 11))
-        elif z < (1 << 17):
-            codes.append((2, 2)); pays.append((z, 17))
-        else:
-            codes.append((3, 2)); pays.append((z, 64))
-    return head + _pack_sections_scalar([flags, codes, pays])
+def dod_encode_many(ts_ms: np.ndarray, offsets) -> tuple[bytes, np.ndarray]:
+    """Delta-of-delta encode every chunk ``ts_ms[offsets[c]:offsets[c+1]]``
+    (each sorted epoch-ms) -> (concatenated ts_chunk bytes, per-chunk byte
+    offsets). A constant-cadence chunk costs ~1 bit/sample."""
+    ts = np.ascontiguousarray(ts_ms, dtype=np.int64)
+    n = np.diff(np.asarray(offsets, dtype=np.int64))
+    heads, later = _split(n)
+    delta = np.diff(ts, prepend=ts[:1])
+    delta[heads] = 0  # the first delta is taken against an implicit 0
+    z = _zigzag(np.diff(delta, prepend=np.int64(0))[later])
+    nz = z != 0
+    zn = z[nz]
+    code = np.searchsorted(_DOD_LIMITS, zn, side="right")
+    return _pack(n, ts[heads].view(_U64), nz, code, 2, zn, _DOD_WIDTHS[code])
 
 
-def _dod_decode_small(buf: bytes, n: int) -> np.ndarray:
-    t0 = int.from_bytes(buf[:8], "little", signed=True)
-    out = [0] * n
-    out[0] = t0
-    if n == 1:
-        return np.array(out, dtype=np.int64)
-    r = _BitReader(buf[8:])
-    nz = [r.take(1) for _ in range(n - 1)]
-    r.align()
-    k = sum(nz)
-    codes = [r.take(2) for _ in range(k)]
-    r.align()
-    widths = (7, 11, 17, 64)
-    ci = 0
-    d = 0
-    cur = t0
-    for i in range(n - 1):
-        if nz[i]:
-            z = r.take(widths[codes[ci]])
-            ci += 1
-            dod = (z >> 1) ^ -(z & 1)
-        else:
-            dod = 0
-        d = _wrap64(d + dod)
-        cur = _wrap64(cur + d)
-        out[i + 1] = cur
-    return np.array(out, dtype=np.int64)
+def dod_decode_many(buf, byte_offsets, ns) -> np.ndarray:
+    """Inverse of dod_encode_many: the concatenated timestamps of chunks
+    ``buf[byte_offsets[c]:byte_offsets[c+1]]`` holding ``ns[c]`` samples.
+    Raises ValueError naming the first chunk whose length is wrong."""
+    n = np.asarray(ns, dtype=np.int64)
+    t0, nz, code, pay, _ = _unpack(
+        buf, byte_offsets, n, 2, lambda c: _DOD_WIDTHS[c.astype(np.int64)], "ts_chunk"
+    )
+    heads, later = _split(n)
+    z = np.zeros(len(nz), dtype=_U64)
+    z[nz] = pay
+    dod = np.zeros(len(later), dtype=np.int64)
+    dod[later] = _unzigzag(z)
+    live = n[n > 0]
+    # restart both running sums at each chunk head (int64 wraps like the encoder)
+    delta = np.cumsum(dod)
+    delta -= np.repeat(delta[heads], live)
+    run = np.cumsum(delta)
+    return run + np.repeat(t0.view(np.int64) - run[heads], live)
 
 
 def dod_encode(ts_ms: np.ndarray) -> bytes:
-    """Delta-of-delta encode an int64 epoch-ms array (sorted).
-
-    Sections: [1-bit nonzero flags x (n-1)] [2-bit bucket codes x nnz]
-    [payloads] — a constant-cadence series costs ~1 bit/sample like
-    interleaved Gorilla."""
+    """One ts_chunk: [8B t0 LE] [1-bit nonzero flags x (n-1)] [2-bit bucket
+    codes x nnz] [payloads], each section padded to a byte."""
     ts = np.ascontiguousarray(ts_ms, dtype=np.int64)
-    n = len(ts)
-    if n == 0:
-        return b""
-    if n <= _SMALL_N:
-        return _dod_encode_small(ts)
-    head = ts[:1].astype("<i8").tobytes()
-    if n == 1:
-        return head
-    deltas = np.diff(ts)
-    dods = np.empty(n - 1, dtype=np.int64)
-    dods[0] = deltas[0]  # first delta vs an implicit 0
-    dods[1:] = np.diff(deltas)
-    z = _zigzag(dods)
-    nz = z != 0
-    zn = z[nz]
-    code = np.full(len(zn), 3, dtype=np.int64)
-    code[zn < (1 << 17)] = 2
-    code[zn < (1 << 11)] = 1
-    code[zn < (1 << 7)] = 0
-    return (
-        head
-        + _pack_fixed(nz.astype(_U64), 1)
-        + _pack_fixed(code.astype(_U64), 2)
-        + _pack_var(zn, _DOD_WIDTHS[code])
-    )
+    return dod_encode_many(ts, [0, len(ts)])[0]
 
 
 def dod_decode(buf: bytes, n: int) -> np.ndarray:
-    if n == 0:
-        return np.empty(0, dtype=np.int64)
-    if n <= _SMALL_N:
-        return _dod_decode_small(buf, n)
-    t0 = np.frombuffer(buf[:8], dtype="<i8")[0]
-    if n == 1:
-        return np.array([t0], dtype=np.int64)
-    bits = _bits_of(buf[8:])
-    nz = _unpack_fixed(bits, 0, n - 1, 1).astype(bool)
-    k = int(nz.sum())
-    code_start = _pad_bits(n - 1)
-    code = _unpack_fixed(bits, code_start, k, 2).astype(np.int64)
-    pay_start = code_start + _pad_bits(2 * k)
-    z = np.zeros(n - 1, dtype=_U64)
-    z[nz] = _unpack_var(bits, pay_start, _DOD_WIDTHS[code])
-    dods = _unzigzag(z)
-    deltas = np.cumsum(dods)
-    out = np.empty(n, dtype=np.int64)
-    out[0] = t0
-    out[1:] = t0 + np.cumsum(deltas)
-    return out
+    return dod_decode_many(buf, [0, len(buf)], [n])
 
 
 # ---------------------------------------------------------------------------
@@ -298,112 +260,61 @@ def dod_decode(buf: bytes, n: int) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
-def _xor_encode_small(v: np.ndarray) -> bytes:
-    bits = [int(b) for b in v.view(_U64)]
-    head = bits[0].to_bytes(8, "little")
-    n = len(bits)
-    if n == 1:
-        return head
-    flags: list[tuple[int, int]] = []
-    hdrs: list[tuple[int, int]] = []
-    pays: list[tuple[int, int]] = []
-    for i in range(1, n):
-        x = bits[i] ^ bits[i - 1]
-        if x == 0:
-            flags.append((0, 1))
-            continue
-        flags.append((1, 1))
-        lead = min(64 - x.bit_length(), 31)
-        trail = (x & -x).bit_length() - 1
-        mean = 64 - lead - trail
-        hdrs.append(((lead << 6) | (mean % 64), 11))
-        pays.append((x >> trail, mean))
-    return head + _pack_sections_scalar([flags, hdrs, pays])
+def _xor_width(hdr: np.ndarray) -> np.ndarray:
+    """Meaningful-bit count from an 11-bit header (6-bit field, 0 -> 64)."""
+    return ((hdr.astype(np.int64) - 1) & 63) + 1
 
 
-def _xor_decode_small(buf: bytes, n: int) -> np.ndarray:
-    cur = int.from_bytes(buf[:8], "little")
-    out = [0] * n
-    out[0] = cur
-    if n > 1:
-        r = _BitReader(buf[8:])
-        nz = [r.take(1) for _ in range(n - 1)]
-        r.align()
-        k = sum(nz)
-        hdrs = [r.take(11) for _ in range(k)]
-        r.align()
-        ci = 0
-        for i in range(n - 1):
-            if nz[i]:
-                h = hdrs[ci]
-                ci += 1
-                lead = h >> 6
-                mean = h & 0x3F or 64
-                trail = 64 - lead - mean
-                cur ^= r.take(mean) << trail
-            out[i + 1] = cur
-    return np.array(out, dtype=_U64).view(np.float64)
+def xor_encode_many(vals: np.ndarray, offsets) -> tuple[bytes, np.ndarray]:
+    """Gorilla-XOR encode every chunk ``vals[offsets[c]:offsets[c+1]]`` ->
+    (concatenated val_chunk bytes, per-chunk byte offsets)."""
+    v = np.ascontiguousarray(vals, dtype=np.float64).view(_U64)
+    n = np.diff(np.asarray(offsets, dtype=np.int64))
+    heads, later = _split(n)
+    x = np.empty_like(v)
+    x[1:] = v[1:] ^ v[:-1]
+    x = x[later]
+    nz = x != 0
+    xn = x[nz]
+    lead = np.minimum(_clz64(xn), 31)  # 5-bit field
+    trail = _ctz64(xn)
+    mean = 64 - lead - trail
+    hdr = (lead << 6) | (mean & 63)
+    return _pack(n, v[heads], nz, hdr, 11, xn >> trail.astype(_U64), mean)
+
+
+def xor_decode_many(buf, byte_offsets, ns) -> np.ndarray:
+    """Inverse of xor_encode_many (float64 bits exact, NaN payloads too).
+    Raises ValueError naming the first malformed chunk."""
+    n = np.asarray(ns, dtype=np.int64)
+    v0, nz, hdr, pay, c_nz = _unpack(buf, byte_offsets, n, 11, _xor_width, "val_chunk")
+    trail = 64 - (hdr >> _U64(6)).astype(np.int64) - _xor_width(hdr)
+    bad = np.flatnonzero(trail < 0)
+    if len(bad):
+        raise ValueError(
+            f"val_chunk {c_nz[bad[0]]} of the batch has header "
+            f"{int(hdr[bad[0]]):#05x}: leading zeros + length exceed 64 bits"
+        )
+    heads, later = _split(n)
+    x = np.zeros(len(nz), dtype=_U64)
+    x[nz] = pay << trail.astype(_U64)
+    bits = np.zeros(len(later), dtype=_U64)
+    bits[later] = x
+    bits[heads] = v0
+    # bits(v_i) = v0 ^ x_1 ^ ... ^ x_i: cancel the prefix before each head
+    acc = np.bitwise_xor.accumulate(bits)
+    return (acc ^ np.repeat(acc[heads] ^ v0, n[n > 0])).view(np.float64)
 
 
 def xor_encode(vals: np.ndarray) -> bytes:
-    v = np.ascontiguousarray(vals, dtype=np.float64).view(_U64)
-    n = len(v)
-    if n == 0:
-        return b""
-    if n <= _SMALL_N:
-        return _xor_encode_small(np.ascontiguousarray(vals, dtype=np.float64))
-    head = v[:1].astype("<u8").tobytes()
-    if n == 1:
-        return head
-    x = v[1:] ^ v[:-1]
-    nz = x != 0
-    flags = _pack_fixed(nz.astype(_U64), 1)
-    lead = np.minimum(_clz64(x[nz]), 31)
-    trail = _ctz64(x[nz])
-    # ensure lead(5b) + mean(6b) fields stay consistent after clamping
-    mean = 64 - lead - trail
-    headers = (lead.astype(_U64) << _U64(6)) | (mean % 64).astype(_U64)
-    payload = (x[nz] >> trail.astype(_U64)) & _mask(mean)
-    return (
-        head
-        + flags
-        + _pack_fixed(headers, 11)
-        + _pack_var(payload, mean)
-    )
+    """One val_chunk: [8B v0 LE] [1-bit diff flags x (n-1)] [11-bit headers
+    x nnz] [meaningful-bit payloads], each section padded to a byte."""
+    v = np.ascontiguousarray(vals, dtype=np.float64)
+    return xor_encode_many(v, [0, len(v)])[0]
 
 
 def xor_decode(buf: bytes, n: int) -> np.ndarray:
-    if n == 0:
-        return np.empty(0, dtype=np.float64)
-    if n <= _SMALL_N:
-        return _xor_decode_small(buf, n)
-    v0 = np.frombuffer(buf[:8], dtype="<u8")[0]
-    if n == 1:
-        return np.array([v0], dtype=_U64).view(np.float64)
-    bits = _bits_of(buf[8:])
-    flags = _unpack_fixed(bits, 0, n - 1, 1).astype(bool)
-    k = int(flags.sum())
-    hdr_start = _pad_bits(n - 1)
-    headers = _unpack_fixed(bits, hdr_start, k, 11)
-    lead = (headers >> _U64(6)).astype(np.int64)
-    mean = (headers & _U64(0x3F)).astype(np.int64)
-    mean[mean == 0] = 64
-    pay_start = hdr_start + _pad_bits(11 * k)
-    payload = _unpack_var(bits, pay_start, mean)
-    trail = (64 - lead - mean).astype(_U64)
-    x = np.zeros(n - 1, dtype=_U64)
-    x[flags] = payload << trail
-    out = np.empty(n, dtype=_U64)
-    out[0] = v0
-    out[1:] = x
-    return np.bitwise_xor.accumulate(out).view(np.float64)
-
-
-def _mask(nbits: np.ndarray) -> np.ndarray:
-    nb = nbits.astype(_U64)
-    full = nb >= _U64(64)
-    m = (_U64(1) << np.where(full, _U64(0), nb)) - _U64(1)
-    return np.where(full, _ALL1, m)
+    return xor_decode_many(buf, [0, len(buf)], [n])
 
 
 def _clz64(x: np.ndarray) -> np.ndarray:

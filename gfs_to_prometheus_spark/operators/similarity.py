@@ -33,28 +33,20 @@ def _dot_terms(a, b):
     )
 
 
-def _d2_terms(a, b):
-    """Scaled-int64 squared-distance terms: floor((a-b)^2 * 1e12 + 0.5).
-    (a-b) and its square are single IEEE ops (deterministic per element);
-    the int64 sum is shuffle-order independent and DuckDB-reproducible,
-    so centroid argmins agree across engines including ties."""
-    def term(x, y):
-        d = x.cast("double") - y.cast("double")
-        return F.floor(d * d * SCALE + 0.5).cast("long")
-
-    return F.zip_with(a, b, term)
-
-
 def _sumlong(arr):
     return F.aggregate(arr, F.lit(0).cast("long"), lambda acc, v: acc + v)
 
 
-def _collect_query_vec(df: DataFrame, query_vec_id: int, vec: str):
-    """The query vector as a numpy float64 array (one pushed-filter scan)."""
+def _query_vec(rows: list, query_vec_id: int, vec: str):
+    """The one collected row whose vec_id is ``query_vec_id`` and its
+    vector as numpy float64; ValueError if the id is missing or repeated."""
     import numpy as np
 
-    (row,) = df.filter(F.col("vec_id") == query_vec_id).select(vec).collect()
-    return np.array([float(x) for x in row[vec]], dtype=np.float64)
+    if len(rows) != 1:
+        raise ValueError(
+            f"query_vec_id {query_vec_id!r} matches {len(rows)} rows, not 1"
+        )
+    return rows[0], np.array([float(x) for x in rows[0][vec]], dtype=np.float64)
 
 
 def _cosine_scores(df: DataFrame, qv, vec: str) -> DataFrame:
@@ -100,7 +92,10 @@ def cosine_topk(
     narrow numpy pass (_cosine_scores) and the global top-k executes as
     TakeOrdered (orderBy+limit — per-partition partial top-k merged on
     the driver, never a full sort)."""
-    qv = _collect_query_vec(df, query_vec_id, vec)
+    _, qv = _query_vec(
+        df.filter(F.col("vec_id") == query_vec_id).select(vec).collect(),
+        query_vec_id, vec,
+    )
     scored = _cosine_scores(
         df.filter(F.col("vec_id") != query_vec_id), qv, vec
     )
@@ -217,8 +212,6 @@ def ann_lsh_topk(
     Size `planes` ~ log2(corpus / target bucket size): buckets shrink 2x
     per plane, so at 10^12 vectors ~26 planes keeps candidate sets small
     while 6 suits the 500-vector fixture (64 buckets, ~8 each)."""
-    import numpy as np
-
     sig = lsh_signature(F.col(vec), planes, dim)
     corpus = df.withColumn("_sig", sig)
     # query vector + signature in one pushed-filter collect; the probe
@@ -227,10 +220,10 @@ def ann_lsh_topk(
     # candidate re-rank is the shared numpy kernel (_cosine_scores, bit-
     # equal to the interpreted zip_with/aggregate fold it replaces, which
     # ran n_cands x 3 x dim boxed ops; guide §4.2)
-    (qrow,) = corpus.filter(F.col("vec_id") == query_vec_id).select(
-        vec, "_sig"
-    ).collect()
-    qv = np.array([float(x) for x in qrow[vec]], dtype=np.float64)
+    qrow, qv = _query_vec(
+        corpus.filter(F.col("vec_id") == query_vec_id).select(vec, "_sig").collect(),
+        query_vec_id, vec,
+    )
     qsig = int(qrow["_sig"])
     probes = [qsig]
     if probe_hamming >= 1:
@@ -310,8 +303,9 @@ def _assign_arrays(cdata: list[tuple[int, list[float]]]):
 
 def _d2_batch(X, C_row):
     """Scaled-int64 squared distances of batch X to one centroid row —
-    per-element floor((a-b)^2 * 1e12 + 0.5) summed as int64, the exact
-    IEEE ops of _d2_terms, so values are bit-equal to the Column form."""
+    per-element floor((a-b)^2 * 1e12 + 0.5) summed as int64. (a-b) and its
+    square are single IEEE ops, so the int64 sum is order independent and
+    equals the DuckDB oracle's, and centroid argmins agree, ties included."""
     import numpy as np
 
     d = X - C_row[None, :]
@@ -463,10 +457,7 @@ def ivf_topk(
         .limit(n_lists)
     )
     rows = qb.unionByName(cb).collect()
-    qv = np.array(
-        [float(x) for x in next(r["_v"] for r in rows if r["_k"] is None)],
-        dtype=np.float64,
-    )
+    _, qv = _query_vec([r for r in rows if r["_k"] is None], query_vec_id, "_v")
     cent = sorted(
         ((r["_k"], r["vec_id"], r["_v"]) for r in rows if r["_k"] is not None)
     )

@@ -176,39 +176,93 @@ def test_compact_encode_kernel_speed():
     assert len(v) / best >= 6_000_000, f"{len(v)/best:.0f} vals/s"
 
 
+def _batch(rng, ns):
+    """Chunks of ``ns`` samples mixing constant cadence, jitter, repeated
+    timestamps, 64-bit dods, repeated values, NaN/+-Inf/-0.0 and random
+    float bit patterns -> (ts, vals, sample offsets)."""
+    ts, vals = [], []
+    for n in ns:
+        step = rng.choice([0, 1, 15_000, 2**33], size=n, p=[0.1, 0.1, 0.6, 0.2])
+        t0 = rng.integers(-(2**40), 2**40)
+        ts.append(t0 + np.cumsum(step + rng.integers(0, 3, n) * (step > 1)))
+        kind = rng.integers(0, 4, n)
+        v = np.round(rng.normal(50, 10, n), 2)
+        specials = [np.nan, np.inf, -np.inf, 0.0, -0.0]
+        v[kind == 1] = rng.choice(specials, (kind == 1).sum())
+        bits = rng.integers(0, 2**63, n, dtype=np.int64).astype(np.uint64)
+        bits <<= np.uint64(1)
+        v[kind == 2] = bits.view(np.float64)[kind == 2]
+        v[1:][kind[1:] == 3] = v[:-1][kind[1:] == 3]
+        vals.append(v)
+    offsets = np.concatenate([[0], np.cumsum(ns)])
+    return np.concatenate(ts).astype(np.int64), np.concatenate(vals), offsets
+
+
 @given(
-    st.integers(min_value=1, max_value=180),
-    st.integers(min_value=0, max_value=2**40),
+    st.lists(st.integers(min_value=1, max_value=300), min_size=1, max_size=40),
+    st.integers(min_value=0, max_value=2**32 - 1),
 )
-@settings(max_examples=60, deadline=None)
-def test_small_chunk_paths_byte_identical(n, t0):
-    """The scalar small-chunk fast paths must emit byte-identical output to
-    the vectorized encoders (and decode to the same values)."""
-    rng = np.random.default_rng(n * 7919 + 13)
-    ts = (t0 + np.cumsum(rng.integers(0, 2**33, n))).astype(np.int64)
-    vals = np.where(
-        rng.random(n) < 0.3, rng.normal(0, 1e6, n), np.round(rng.normal(50, 10, n), 2)
-    ).astype(np.float64)
-    if n > 3:
-        vals[1] = vals[0]
-        vals[2] = np.nan
-        vals[3] = np.inf
-    old = codecs._SMALL_N
-    try:
-        codecs._SMALL_N = 10**9
-        b_dod_s, b_xor_s = codecs.dod_encode(ts), codecs.xor_encode(vals)
-        codecs._SMALL_N = 0
-        b_dod_v, b_xor_v = codecs.dod_encode(ts), codecs.xor_encode(vals)
-        assert b_dod_s == b_dod_v and b_xor_s == b_xor_v
-        codecs._SMALL_N = 10**9
-        t_s, v_s = codecs.dod_decode(b_dod_s, n), codecs.xor_decode(b_xor_s, n)
-        codecs._SMALL_N = 0
-        t_v, v_v = codecs.dod_decode(b_dod_s, n), codecs.xor_decode(b_xor_s, n)
-    finally:
-        codecs._SMALL_N = old
-    assert np.array_equal(t_s, t_v) and np.array_equal(t_s, ts)
-    assert np.array_equal(v_s.view(np.uint64), v_v.view(np.uint64))
-    assert np.array_equal(v_s.view(np.uint64), vals.view(np.uint64))
+@settings(max_examples=100, deadline=None)
+def test_batch_codec_matches_single_chunks(ns, seed):
+    """Each chunk's slice of a batch encode equals that chunk encoded
+    alone, and the batch decode returns every input bit for bit."""
+    t, v, off = _batch(np.random.default_rng(seed), np.array(ns))
+    tb, toff = codecs.dod_encode_many(t, off)
+    vb, voff = codecs.xor_encode_many(v, off)
+    for c in range(len(ns)):
+        a, b = off[c], off[c + 1]
+        assert tb[toff[c] : toff[c + 1]] == codecs.dod_encode(t[a:b])
+        assert vb[voff[c] : voff[c + 1]] == codecs.xor_encode(v[a:b])
+    assert np.array_equal(codecs.dod_decode_many(tb, toff, ns), t)
+    got = codecs.xor_decode_many(vb, voff, ns)
+    assert np.array_equal(got.view(np.uint64), v.view(np.uint64))
+
+
+def test_batch_codec_digest():
+    """Pins the bytes of one seeded 80-chunk, 6014-sample batch (n==1
+    heads up to n=300). The digest was taken from the per-chunk scalar and
+    vectorized encoders that the batch codec replaced."""
+    import hashlib
+
+    rng = np.random.default_rng(4)
+    ns = np.concatenate([[1, 2, 96, 97, 300], rng.integers(1, 130, 75)])
+    t, v, off = _batch(rng, ns)
+    tb, _ = codecs.dod_encode_many(t, off)
+    vb, _ = codecs.xor_encode_many(v, off)
+    assert hashlib.sha256(tb + vb).hexdigest() == (
+        "3c4087fbd695e68df8ccf634b19dfbc8ad384b1be37b9a79e20d7be77ddf46bb"
+    )
+
+
+@pytest.mark.parametrize("codec", ["dod", "xor"])
+@pytest.mark.parametrize("resize", ["head", "short", "long"])
+def test_batch_decode_rejects_bad_chunk_length(codec, resize):
+    """A truncated or over-long chunk in the middle of a batch raises a
+    ValueError naming its index instead of reading its neighbour's bytes."""
+    t, v, off = _batch(np.random.default_rng(7), np.array([3, 40, 5]))
+    enc, dec = {
+        "dod": (lambda: codecs.dod_encode_many(t, off), codecs.dod_decode_many),
+        "xor": (lambda: codecs.xor_encode_many(v, off), codecs.xor_decode_many),
+    }[codec]
+    buf, boff = enc()
+    parts = [buf[boff[c] : boff[c + 1]] for c in range(3)]
+    parts[1] = {
+        "head": parts[1][:4],
+        "short": parts[1][:-1],
+        "long": parts[1] + b"\x00",
+    }[resize]
+    boff = np.concatenate([[0], np.cumsum([len(p) for p in parts])])
+    with pytest.raises(ValueError, match=r"_chunk 1 of the batch"):
+        dec(b"".join(parts), boff, np.diff(off))
+
+
+def test_xor_decode_rejects_bad_header():
+    """An 11-bit header whose leading zeros plus length exceed 64 bits
+    (lead 31, length 63) cannot come from the encoder."""
+    hdr = (31 << 6) | 63
+    buf = bytes(8) + b"\x80" + (hdr << 5).to_bytes(2, "big") + bytes(8)
+    with pytest.raises(ValueError, match=r"val_chunk 0 of the batch has header"):
+        codecs.xor_decode(buf, 2)
 
 
 @given(
@@ -276,10 +330,10 @@ def _golden_inputs(n):
 @pytest.mark.parametrize(
     "n, ts_hex, val_hex",
     [
-        # n <= _SMALL_N: the scalar encoders
+        # a short chunk: 1-, 7- and 11-bit fields
         (5, "0068e5cf8b010000b044fa07bca0",
          "000000000000f03f7009a03c1c00ffec00780852b3afb7e910"),
-        # n > _SMALL_N: the vectorized encoders
+        # a long chunk: one dod in each payload class
         (120,
          "0068e5cf8b010000806000000180000006000000180000816bc03a984a93c238"
          "3f5303a97e00000000ee6b280000000000ee6b27fe",

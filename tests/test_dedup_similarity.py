@@ -81,6 +81,21 @@ def test_ivf_recall(spark, emb):
     assert approx == again
 
 
+@pytest.mark.parametrize(
+    "search", [similarity.cosine_topk, similarity.ann_lsh_topk, similarity.ivf_topk]
+)
+@pytest.mark.parametrize("case", ["missing", "duplicated"])
+def test_topk_rejects_bad_query_id(spark, emb, search, case):
+    """A query id that matches no row, or two rows, is a named error (not
+    an unpacking error, a StopIteration or a silent pick of one row)."""
+    if case == "missing":
+        df, qid = emb, 10**12
+    else:
+        df, qid = emb.unionByName(emb.filter("vec_id = 3")), 3
+    with pytest.raises(ValueError, match=rf"query_vec_id {qid} matches"):
+        search(df, qid, k=5)
+
+
 def test_lsh_verify_is_candidate_local(spark, docs):
     """The verification step must never run the all-pairs shingle self-join:
     every equi-join on `shingle` must be keyed on (doc id, shingle), i.e. no

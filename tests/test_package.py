@@ -46,11 +46,14 @@ def test_zip_tracks_source_tree():
             capture_output=True, text=True, check=True,
         )
     with zipfile.ZipFile(zip_path) as z:
-        in_zip = {n for n in z.namelist() if n.endswith(".py")}
+        in_zip = {n: z.read(n) for n in z.namelist() if n.endswith(".py")}
     on_disk = {
-        str(p.relative_to(REPO))
+        str(p.relative_to(REPO)): p.read_bytes()
         for p in (REPO / "gfs_to_prometheus_spark").rglob("*.py")
         if "__pycache__" not in str(p)
     }
-    missing = sorted(on_disk - in_zip)
-    assert not missing, f"stale dist zip — rerun tools/package.py: {missing}"
+    # bytes, not just names: a zip built before a source edit would ship
+    # the old code to the executors
+    names = on_disk.keys() | in_zip.keys()
+    stale = sorted(k for k in names if in_zip.get(k) != on_disk.get(k))
+    assert not stale, f"stale dist zip — rerun tools/package.py: {stale}"
