@@ -8,10 +8,10 @@ equidistant and the curve meaningless).
 
 Probe selection, list assignment and centroid builds run through the
 REAL operators (similarity.ivf_centroids / ivf_refine / ivf_index on
-Spark); per-query scoring replays ivf_topk's exact arithmetic (scaled
-int64 dot/norms, double division, (-cos, vec_id) order) in numpy so the
-20-query x 24-config grid doesn't need 480 Spark jobs — the ranking is
-bit-identical to the operator's by construction.
+Spark); per-query probe ranking and scoring call the operator's own
+numpy kernels (similarity._isum distances, similarity._cosine; (-cos,
+vec_id) order) so the 20-query x 24-config grid doesn't need 480 Spark
+jobs — the ranking is bit-identical to the operator's by construction.
 
 Appends a table to BENCH/BASELINE.md and prints one JSON line.
 """
@@ -28,7 +28,6 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(HERE)
 sys.path.insert(0, REPO)
 
-SCALE = 1e12
 N_LISTS = 16
 K = 10
 N_QUERIES = 20
@@ -42,16 +41,6 @@ def synth(n: int) -> np.ndarray:
     centers = rng.randn(32, 64)
     x = centers[np.arange(n) % 32] + 0.15 * rng.randn(n, 64)
     return x.astype(np.float32)
-
-
-def scaled_dot(x64: np.ndarray, q64: np.ndarray) -> np.ndarray:
-    """sum_j floor(x_j * q_j * 1e12 + 0.5) as int64 — _dot_terms' math."""
-    return np.floor(x64 * q64 * SCALE + 0.5).astype(np.int64).sum(axis=-1)
-
-
-def scaled_d2(x64: np.ndarray, q64: np.ndarray) -> np.ndarray:
-    d = x64 - q64
-    return np.floor(d * d * SCALE + 0.5).astype(np.int64).sum(axis=-1)
 
 
 def topk_ids(ids: np.ndarray, cos: np.ndarray, k: int) -> list[int]:
@@ -85,13 +74,9 @@ def main() -> None:
         df.count()
         queries = [int(i * n // N_QUERIES) for i in range(N_QUERIES)]
         # exact ground truth per query (same scaled-int64 cosine)
-        norms = scaled_dot(x64, x64)
         truth = {}
         for q in queries:
-            cos = scaled_dot(x64, x64[q]) / (
-                np.sqrt(norms.astype(np.float64))
-                * np.sqrt(float(scaled_dot(x64[q], x64[q])))
-            )
+            cos = similarity._cosine(x64, x64[q])
             mask = ids != q
             truth[q] = set(topk_ids(ids[mask], cos[mask], K))
         for lloyd in LLOYD:
@@ -132,13 +117,11 @@ def main() -> None:
             for n_probe in PROBES:
                 hits = 0
                 for q in queries:
-                    d2 = scaled_d2(cvecs, x64[q])
+                    d = cvecs - x64[q]
+                    d2 = similarity._isum(d, d)
                     probe = cids[np.lexsort((cids, d2))[:n_probe]]
                     cand = ids[np.isin(alist, probe) & (ids != q)]
-                    cos = scaled_dot(x64[cand], x64[q]) / (
-                        np.sqrt(norms[cand].astype(np.float64))
-                        * np.sqrt(float(scaled_dot(x64[q], x64[q])))
-                    )
+                    cos = similarity._cosine(x64[cand], x64[q])
                     got = set(topk_ids(cand, cos, K))
                     hits += len(got & truth[q])
                 recall = hits / (K * len(queries))

@@ -36,20 +36,20 @@ def shingles(df: DataFrame, text: str = "text", n: int = 3) -> DataFrame:
 
     The token array is materialized as a column BEFORE the lambda uses it:
     referencing the split inside transform() re-evaluates it per array
-    element (O(len^2) — measured 4x slowdown on sf0.1). Both projections
-    are built from SQL strings (two parser calls) instead of nested
-    Column-object lambdas: the py4j construction of the transform chain
-    cost ~0.05 s of driver wall per call, and shingles() runs twice per
-    near-dup query (signature chain + verify side) — the parsed
-    expressions (trim/split/sequence/element_at/concat_ws) are the exact
-    ones the Column form produced, so values and oracles are unchanged."""
+    element (O(len^2) — measured 4x slowdown on sf0.1). The tokens come
+    from text.ws_tokens, a Column whose regex no parser setting can
+    reinterpret (under spark.sql.parser.escapedStringLiterals an SQL
+    '\\\\s+' literal stops matching whitespace and every document
+    collapses to one shingle). The gram projection is built from an SQL
+    string instead of nested Column-object lambdas: the py4j construction
+    of the transform chain cost ~0.05 s of driver wall per call, and
+    shingles() runs twice per near-dup query (signature chain + verify
+    side)."""
     grams = ", ".join(
         f"element_at(_w, CAST(i + {j} AS INT))" for j in range(n)
     )
-    return df.selectExpr(
-        "doc_id",
-        f"trim(`{text}`) AS _t",
-        f"split(trim(`{text}`), '\\\\s+') AS _w",
+    return df.select(
+        "doc_id", F.trim(F.col(text)).alias("_t"), ws_tokens(text).alias("_w")
     ).selectExpr(
         "doc_id",
         f"explode(CASE WHEN size(_w) >= {n} THEN "

@@ -482,9 +482,9 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lsh_sig_sql(planes: int, dim: int = 64, col: str = "embedding") -> str:
-    """DuckDB twin of similarity.lsh_signature: per plane, the scaled-int64
-    projection against the md5-derived literal weights (pre-scaled 1e6),
-    bit = projection >= 0."""
+    """DuckDB twin of similarity._sign_bits packed as ann_lsh_topk's bucket
+    (bit p weighs 2^p): per plane, the scaled-int64 projection against the
+    md5-derived literal weights (pre-scaled 1e6), bit = projection >= 0."""
     weights = plane_weights(planes, dim)
     terms = []
     for p in range(planes):

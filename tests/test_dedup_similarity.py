@@ -3,10 +3,13 @@
 
 from __future__ import annotations
 
+import math
+
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from gfs_to_prometheus_spark.operators import dedup, similarity
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, compare_frames
 
 
 @pytest.fixture(scope="module")
@@ -267,3 +270,120 @@ def test_components_chain_converges_in_log_rounds(spark):
     got = {r["doc_id"]: r["component"] for r in labels.collect()}
     assert got == {i: 1 for i in range(1, 65)}
     assert rounds <= 12, rounds
+
+
+def test_shingles_ignore_parser_settings(spark, docs):
+    """Tokenization must not depend on SQL parser settings: under
+    escapedStringLiterals an SQL '\\\\s+' literal no longer matches
+    whitespace, which would collapse every document to one shingle."""
+    key = "spark.sql.parser.escapedStringLiterals"
+    want = sorted(tuple(r) for r in dedup.shingles(docs).collect())
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "true")
+        got = sorted(tuple(r) for r in dedup.shingles(docs).collect())
+    finally:
+        spark.conf.set(key, old)
+    assert len(want) > docs.count()
+    assert got == want
+
+
+_vec32 = st.floats(
+    min_value=-8, max_value=8, width=32, allow_nan=False, allow_infinity=False
+)
+
+
+@st.composite
+def _matrices(draw, dim=None):
+    """float32 rows (negatives, zeros) with at least one repeated row."""
+    import numpy as np
+
+    dim = dim or draw(st.integers(1, 12))
+    row = st.lists(st.one_of(st.just(0.0), _vec32), min_size=dim, max_size=dim)
+    rows = draw(st.lists(row, min_size=1, max_size=6))
+    rows.append(rows[draw(st.integers(0, len(rows) - 1))])
+    return np.array(rows, dtype=np.float32).astype(np.float64)
+
+
+def _ref_isum(a, b, scale=1e12):
+    return sum(math.floor(float(x) * float(y) * scale + 0.5) for x, y in zip(a, b))
+
+
+@settings(max_examples=60, deadline=None)
+@given(_matrices(), st.data())
+def test_isum_matches_python_reference(X, data):
+    q = X[data.draw(st.integers(0, len(X) - 1))]
+    got = similarity._isum(X, q)
+    assert [int(v) for v in got] == [_ref_isum(x, q) for x in X]
+    assert int(similarity._isum(q, q)) == _ref_isum(q, q)
+
+
+@settings(max_examples=60, deadline=None)
+@given(st.data())
+def test_nearest_breaks_ties_to_lower_index(data):
+    import numpy as np
+
+    C = data.draw(_matrices())
+    X = np.concatenate([data.draw(_matrices(C.shape[1])), C])
+    C = np.concatenate([C, C[:1]])  # the last centroid ties the first
+    idx, d2 = similarity._nearest(X, C)
+    for x, i, d in zip(X, idx, d2):
+        ref = [_ref_isum(x - c, x - c) for c in C]
+        assert int(d) == min(ref)
+        assert int(i) == ref.index(min(ref))
+        assert int(i) != len(C) - 1
+
+
+@settings(max_examples=40, deadline=None)
+@given(_matrices(), st.integers(1, 8))
+def test_sign_bits_match_projection_sign(X, planes):
+    W = similarity._planes(planes, X.shape[1])
+    bits = similarity._sign_bits(X, W)
+    assert bits.shape == (len(X), planes)
+    for x, b in zip(X, bits):
+        assert list(b) == [_ref_isum(x, w, 1e6) >= 0 for w in W]
+
+
+def test_sign_bits_blocking_is_seamless():
+    """Rows spanning several ~32 MB blocks give the per-row result."""
+    import numpy as np
+
+    X = np.random.default_rng(3).normal(size=(700, 64)).astype(np.float32)
+    X = X.astype(np.float64)
+    W = similarity._planes(256, 64)  # 256 rows per block
+    want = np.array([similarity._isum(x, W, 1e6) >= 0 for x in X])
+    assert (similarity._sign_bits(X, W) == want).all()
+
+
+def test_ann_lsh_ten_planes_matches_oracle(spark, emb, duck):
+    """A non-default plane count: candidates and ranking match DuckDB."""
+    from gfs_to_prometheus_spark import queries  # registers queries_data
+
+    compare_frames(
+        similarity.ann_lsh_topk(emb, 0, k=20, planes=10),
+        duck.sql(queries.queries_data._ann_lsh_sql(planes=10, k=20)),
+    )
+
+
+def test_ivf_total_distance_is_exact(spark, emb):
+    """The Lloyd objective is an exact integer sum: partitioning cannot
+    change a single bit of it."""
+    cents = similarity.ivf_centroids(emb, n_lists=8)
+    d = similarity.ivf_total_distance(emb, cents)
+    assert d > 0
+    assert similarity.ivf_total_distance(emb.repartition(7), cents) == d
+    assert similarity.ivf_total_distance(emb.coalesce(1), cents) == d
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["cosine_topk", "ann_lsh_topk", "ivf_ann_topk", "embedding_dup_pairs",
+     "embedding_dup_pairs_lsh"],
+)
+def test_embedding_queries_have_no_interpreted_fold(spark, name):
+    """Vector metrics run as numpy kernels: no higher-order function
+    (zip_with/aggregate/transform leave a lambdafunction) in the plan."""
+    from gfs_to_prometheus_spark.queries import QUERIES
+
+    plan = QUERIES[name](spark, SF_DIR)._jdf.queryExecution().analyzed()
+    assert "lambdafunction" not in plan.toString(), plan.toString()
